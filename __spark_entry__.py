@@ -124,28 +124,18 @@ def _kg_token_tag_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_corpus_training.py against the oracle)."""
     from kgforge.stages.corpus import rechunk_corpus, token_tag_corpus
     from kgforge.stages.normalize import normalize
+    from kgforge.stages.rows import map_rows
     from kgforge.textnorm.cleaning import clean_text, kept_removed_puncs, lower
     from kgforge.textnorm.constants import DEFAULT_ENGLISH_NER_MAPPING
 
     norm = normalize(_fixture_webdocs(spark, sf_dir)).where(F.col("lang") == "en")
     kept, removed = kept_removed_puncs(DEFAULT_ENGLISH_NER_MAPPING)
 
-    import pandas as pd
+    def clean(url, text_norm):
+        yield url, clean_text(text_norm or "", kept, removed, lower)
 
-    def clean(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["url"],
-                    "line": [
-                        clean_text(t or "", kept, removed, lower)
-                        for t in pdf["text_norm"].tolist()
-                    ],
-                }
-            )
-
-    cleaned = norm.select("url", "text_norm").mapInPandas(
-        clean, "doc_id string, line string"
+    cleaned = map_rows(
+        norm.select("url", "text_norm"), "doc_id string, line string", clean
     )
     chunks = rechunk_corpus(token_tag_corpus(cleaned), 8, 64)
     return chunks.groupBy(F.size("tokens").alias("chunk_len")).agg(

@@ -878,9 +878,14 @@ def _write(path: str, rows: list[dict], schema) -> None:
 
 
 def _fingerprint(tier: str, sf_dir: str) -> str:
+    # content hash: re-creating the fixture directory with the same bytes
+    # changes mtimes but must not re-stamp the committed _VERSION files
     doc_pq = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_pq) if os.path.exists(doc_pq) else None
-    doc_sig = f"{st.st_size}:{int(st.st_mtime)}" if st else "absent"
+    if os.path.exists(doc_pq):
+        with open(doc_pq, "rb") as fh:
+            doc_sig = hashlib.sha256(fh.read()).hexdigest()
+    else:
+        doc_sig = "absent"
     return f"{EXPECTED_VERSION}|{tier}|{TIER_DOCS.get(tier, 300)}|{doc_sig}"
 
 

@@ -91,7 +91,6 @@ def write_table(
     path: str,
     stage: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     use_iceberg: bool = False,
     collect_lineage: bool = True,
 ) -> dict:
@@ -103,7 +102,7 @@ def write_table(
         writer.createOrReplace()
         data_df = df.sparkSession.read.format("iceberg").load(path)
     else:
-        writer = df.write.mode(mode)
+        writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)

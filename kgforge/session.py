@@ -35,7 +35,9 @@ def get_spark(
     # pandas concurrently cost the same wall-clock as one serial daemon
     # import — the first-Arrow-stage overhead is JVM-side class loading
     # plus one import chain, both fixed; measured 2.3-2.5 s first call
-    # either way, 0.5 s steady.)
+    # either way, 0.5 s steady.) Executors under a non-local master do
+    # not inherit the driver environment, so the repo root also goes into
+    # spark.executorEnv.PYTHONPATH.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if repo_root not in existing.split(os.pathsep):
@@ -53,6 +55,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", repo_root)
         .config(
             "spark.driver.memory", os.environ.get("KGFORGE_DRIVER_MEMORY", "8g")
         )

@@ -9,11 +9,13 @@ an export path is given.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgforge.stages.rows import map_rows
+from kgforge.textnorm.cleaning import process_line
+from kgforge.textnorm.constants import DEFAULT_ENGLISH_NER_MAPPING
+from kgforge.textnorm.corpus import rechunk_doc
 
 TOKEN_TAG_SCHEMA = "doc_id string, tokens array<string>, tags array<string>"
 CHUNK_SCHEMA = (
@@ -25,24 +27,14 @@ def token_tag_corpus(
     cleaned: DataFrame, ner_mapping: dict[str, str] | None = None
 ) -> DataFrame:
     """cleaned(doc_id, line) → (doc_id, tokens, tags) via the oracle
-    ``process_line`` state machine (R2) in one Arrow-batched stage."""
-    from kgforge.textnorm.constants import DEFAULT_ENGLISH_NER_MAPPING
-
+    ``process_line`` state machine (R2) in one ``map_rows`` stage."""
     mapping = ner_mapping or DEFAULT_ENGLISH_NER_MAPPING
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.cleaning import process_line
+    def emit(doc_id, line):
+        tokens, tags = process_line(line or "", mapping)
+        yield doc_id, tokens, tags
 
-        for pdf in batches:
-            ids, toks, tags = [], [], []
-            for doc_id, line in zip(pdf["doc_id"].tolist(), pdf["line"].tolist()):
-                token_list, tag_list = process_line(line or "", mapping)
-                ids.append(doc_id)
-                toks.append(token_list)
-                tags.append(tag_list)
-            yield pd.DataFrame({"doc_id": ids, "tokens": toks, "tags": tags})
-
-    return cleaned.select("doc_id", "line").mapInPandas(run, TOKEN_TAG_SCHEMA)
+    return map_rows(cleaned.select("doc_id", "line"), TOKEN_TAG_SCHEMA, emit)
 
 
 def rechunk_corpus(
@@ -52,36 +44,19 @@ def rechunk_corpus(
     chunk lengths are hash-of-(doc_id, chunk_ordinal), so output is
     identical under any partitioning or resume (SURVEY §4.3-5)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.corpus import rechunk_doc
+    def emit(doc_id, tokens, tags):
+        chunks = rechunk_doc(
+            list(tokens),
+            list(tags),
+            str(doc_id),
+            min_sequence_length,
+            max_sequence_length,
+        )
+        for chunk_id, (chunk_tokens, chunk_tags) in enumerate(chunks):
+            yield doc_id, chunk_id, chunk_tokens, chunk_tags
 
-        for pdf in batches:
-            ids, cids, toks, tags = [], [], [], []
-            for doc_id, token_list, tag_list in zip(
-                pdf["doc_id"].tolist(), pdf["tokens"].tolist(), pdf["tags"].tolist()
-            ):
-                chunks = rechunk_doc(
-                    list(token_list),
-                    list(tag_list),
-                    str(doc_id),
-                    min_sequence_length,
-                    max_sequence_length,
-                )
-                for cid, (tok, tag) in enumerate(chunks):
-                    ids.append(doc_id)
-                    cids.append(cid)
-                    toks.append(tok)
-                    tags.append(tag)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "chunk_id": pd.Series(cids, dtype="int32"),
-                    "tokens": toks,
-                    "tags": tags,
-                }
-            )
-
-    return corpus.mapInPandas(run, CHUNK_SCHEMA)
+    src = corpus.select("doc_id", "tokens", "tags")
+    return map_rows(src, CHUNK_SCHEMA, emit)
 
 
 def token_tag_rows(corpus: DataFrame) -> DataFrame:

@@ -4,25 +4,22 @@ The modular stages (normalize / sentences / triples) each cross the
 JVM↔Python boundary; chained, a task holds two live Python workers and
 pays worker startup twice. For the throughput path (the part that scales
 with a 100-TB corpus) this stage fuses normalize + sentence split + triple
-extraction into a single ``mapInPandas`` — one worker per task, one Arrow
-crossing, identical output to ``triples(sentences(normalize(webdocs)))``
-(asserted by tests/test_docstream.py). The driver pre-computes the
-full-Unicode CURRENCY pattern and ships it in the closure so workers skip
-the ~1s per-process scan (SURVEY.md §4.1).
+extraction into a single ``map_rows`` stage — one worker per task, one
+Arrow crossing, identical output to ``triples(sentences(normalize(webdocs)))``
+(asserted by tests/test_docstream.py). Loop and punctuator:
+kgforge.stages.rows.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from kgforge.extract.triples import doc_triples
+from kgforge.extract.triples import doc_triples, split_sentences
+from kgforge.linking.mentions import build_mention_index, find_mentions
 from kgforge.stages.extract import TRIPLES_SCHEMA
-from kgforge.stages.normalize import _tag_map
-from kgforge.textnorm.constants import currency_regex_pattern
-from kgforge.textnorm.pipeline import DEFAULT_MAX_SEQUENCE_LENGTH, punctuate_one
+from kgforge.stages.link import MENTIONS_SCHEMA
+from kgforge.stages.rows import map_rows, punctuator
+from kgforge.textnorm.pipeline import DEFAULT_MAX_SEQUENCE_LENGTH
 
 
 def extract_docstream(
@@ -33,54 +30,16 @@ def extract_docstream(
 ) -> DataFrame:
     """webdocs(url, warc_ts, html, text, lang) → triples_raw(url, warc_ts,
     sent_id, subj, pred, obj, conf), fused."""
-    currency_pattern = currency_regex_pattern()  # driver-side scan, shipped
+    punctuate = punctuator(backend, max_sequence_length, **backend_kwargs)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.constants import prime_currency_pattern
-        from kgforge.textnorm.tagger import get_tagger
-
-        prime_currency_pattern(currency_pattern)
-        taggers: dict[str, object] = {}
-        for pdf in batches:
-            urls, tss, sids = [], [], []
-            subjs, preds, objs, confs = [], [], [], []
-            # plain-list iteration: pandas Series iteration is ~2× slower
-            for url, ts, text, lang in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["text"].tolist(),
-                pdf["lang"].tolist(),
-            ):
-                lang = lang or "en"
-                tagger = taggers.get(lang)
-                if tagger is None:
-                    tagger = get_tagger(backend, lang, **backend_kwargs)
-                    taggers[lang] = tagger
-                text_norm, _labels = punctuate_one(
-                    text or "", tagger, _tag_map(lang), max_sequence_length
-                )
-                for sent_id, subj, pred, obj, conf in doc_triples(text_norm, lang):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sent_id)
-                    subjs.append(subj)
-                    preds.append(pred)
-                    objs.append(obj)
-                    confs.append(conf)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_ts": pd.Series(tss, dtype="datetime64[us]"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "subj": pd.Series(subjs, dtype="object"),
-                    "pred": pd.Series(preds, dtype="object"),
-                    "obj": pd.Series(objs, dtype="object"),
-                    "conf": pd.Series(confs, dtype="float64"),
-                }
-            )
+    def emit(url, warc_ts, text, lang):
+        lang = lang or "en"
+        text_norm, _labels = punctuate(text, lang)
+        for sent_id, subj, pred, obj, conf in doc_triples(text_norm, lang):
+            yield url, warc_ts, sent_id, subj, pred, obj, conf
 
     src = webdocs.select("url", "warc_ts", "text", "lang")
-    return src.mapInPandas(run, TRIPLES_SCHEMA)
+    return map_rows(src, TRIPLES_SCHEMA, emit)
 
 
 def scan_mentions_docstream(
@@ -96,50 +55,15 @@ def scan_mentions_docstream(
     stages pay worker startup and Arrow crossings twice). Output is
     identical to ``scan_mentions(sentences(normalize(webdocs)), aliases)``
     (asserted in tests/test_mentions.py)."""
-    from kgforge.extract.triples import split_sentences
-    from kgforge.linking.mentions import build_mention_index, find_mentions
-
-    currency_pattern = currency_regex_pattern()
+    punctuate = punctuator(backend, max_sequence_length, **backend_kwargs)
     en_index, zh_aliases = build_mention_index(aliases)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.constants import prime_currency_pattern
-        from kgforge.textnorm.tagger import get_tagger
+    def emit(url, text, lang):
+        lang = lang or "en"
+        text_norm, _labels = punctuate(text, lang)
+        for sent_id, sentence in enumerate(split_sentences(text_norm, lang)):
+            for surface in find_mentions(sentence, lang, en_index, zh_aliases):
+                yield url, sent_id, surface
 
-        prime_currency_pattern(currency_pattern)
-        taggers: dict[str, object] = {}
-        for pdf in batches:
-            urls: list[str] = []
-            sids: list[int] = []
-            surfaces: list[str] = []
-            for url, text, lang in zip(
-                pdf["url"].tolist(), pdf["text"].tolist(), pdf["lang"].tolist()
-            ):
-                lang = lang or "en"
-                tagger = taggers.get(lang)
-                if tagger is None:
-                    tagger = get_tagger(backend, lang, **backend_kwargs)
-                    taggers[lang] = tagger
-                text_norm, _labels = punctuate_one(
-                    text or "", tagger, _tag_map(lang), max_sequence_length
-                )
-                for sent_id, sentence in enumerate(
-                    split_sentences(text_norm, lang)
-                ):
-                    for surface in find_mentions(
-                        sentence, lang, en_index, zh_aliases
-                    ):
-                        urls.append(url)
-                        sids.append(sent_id)
-                        surfaces.append(surface)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "mention": pd.Series(surfaces, dtype="object"),
-                }
-            )
-
-    return webdocs.select("url", "text", "lang").mapInPandas(
-        run, "url string, sent_id int, mention string"
-    )
+    src = webdocs.select("url", "text", "lang")
+    return map_rows(src, MENTIONS_SCHEMA, emit)

@@ -1,21 +1,20 @@
 """Stage B — sentence split + triple extraction.
 
 Sentence split is pure JVM-side Catalyst work (``split`` + ``posexplode``
-inside WholeStageCodegen — no shuffle, no Python). Triple extraction calls
-the shared pure extractor (kgforge.extract.triples) inside one Arrow-batched
-``mapInPandas``. Neither stage shuffles; parallelism is inherited from the
-input partitioning, so the plan scales linearly with executors.
+inside WholeStageCodegen — no shuffle, no Python). Triple extraction runs
+the shared pure extractor (kgforge.extract.triples) per sentence through
+``kgforge.stages.rows.map_rows``. Neither stage shuffles; parallelism is
+inherited from the input partitioning, so the plan scales linearly with
+executors.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.extract.triples import extract_triples
+from kgforge.stages.rows import map_rows
 
 SENTENCES_SCHEMA = (
     "url string, warc_ts timestamp, lang string, sent_id int, sentence string"
@@ -53,40 +52,9 @@ def sentences(norm: DataFrame) -> DataFrame:
 def triples(sentences_df: DataFrame) -> DataFrame:
     """sentences → triples_raw(url, sent_id, subj, pred, obj, conf)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            tss: list = []
-            sids: list[int] = []
-            subjs: list[str] = []
-            preds: list[str] = []
-            objs: list[str] = []
-            confs: list[float] = []
-            for url, ts, lang, sid, sentence in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["lang"].tolist(),
-                pdf["sent_id"].tolist(),
-                pdf["sentence"].tolist(),
-            ):
-                for subj, pred, obj, conf in extract_triples(sentence, lang or "en"):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sid)
-                    subjs.append(subj)
-                    preds.append(pred)
-                    objs.append(obj)
-                    confs.append(conf)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_ts": pd.Series(tss, dtype="datetime64[us]"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "subj": pd.Series(subjs, dtype="object"),
-                    "pred": pd.Series(preds, dtype="object"),
-                    "obj": pd.Series(objs, dtype="object"),
-                    "conf": pd.Series(confs, dtype="float64"),
-                }
-            )
+    def emit(url, warc_ts, lang, sent_id, sentence):
+        for subj, pred, obj, conf in extract_triples(sentence, lang or "en"):
+            yield url, warc_ts, sent_id, subj, pred, obj, conf
 
-    return sentences_df.mapInPandas(run, TRIPLES_SCHEMA)
+    src = sentences_df.select("url", "warc_ts", "lang", "sent_id", "sentence")
+    return map_rows(src, TRIPLES_SCHEMA, emit)

@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from kgforge.stages.rows import map_rows
+
 ENTITIES_SCHEMA = "mention string, entity_id string, canon string, score double"
+MENTIONS_SCHEMA = "url string, sent_id int, mention string"
 
 
 @pandas_udf(DoubleType())
@@ -140,44 +143,22 @@ def scan_mentions(sentences_df: DataFrame, aliases: list[str]) -> DataFrame:
     leftmost-longest (kgforge.linking.mentions — pure matcher shared with
     the oracle twin). The alias list is dictionary-bounded (same size
     assumption as every broadcast join here) and ships in the closure; the
-    scan itself is one Arrow-batched stage, no shuffle, parallelism
-    inherited from the input — the 100-TB-side cost is one pass over the
-    sentences. Canonical ids come from a later broadcast join against the
-    alias map (link_with_map), keeping matcher and linking decoupled."""
-    from typing import Iterator
-
+    scan itself is one ``map_rows`` stage (kgforge.stages.rows), no
+    shuffle — the 100-TB-side cost is one pass over the sentences.
+    Canonical ids come from a later broadcast join against the alias map
+    (link_with_map), keeping matcher and linking decoupled."""
     from kgforge.linking.mentions import build_mention_index, find_mentions
 
     en_index, zh_aliases = build_mention_index(aliases)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            sids: list[int] = []
-            surfaces: list[str] = []
-            for url, lang, sid, sentence in zip(
-                pdf["url"].tolist(),
-                pdf["lang"].tolist(),
-                pdf["sent_id"].tolist(),
-                pdf["sentence"].tolist(),
-            ):
-                for surface in find_mentions(
-                    sentence or "", lang or "en", en_index, zh_aliases
-                ):
-                    urls.append(url)
-                    sids.append(sid)
-                    surfaces.append(surface)
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "mention": pd.Series(surfaces, dtype="object"),
-                }
-            )
+    def emit(url, lang, sent_id, sentence):
+        for surface in find_mentions(
+            sentence or "", lang or "en", en_index, zh_aliases
+        ):
+            yield url, sent_id, surface
 
-    return sentences_df.select("url", "lang", "sent_id", "sentence").mapInPandas(
-        run, "url string, sent_id int, mention string"
-    )
+    src = sentences_df.select("url", "lang", "sent_id", "sentence")
+    return map_rows(src, MENTIONS_SCHEMA, emit)
 
 
 def link_fuzzy(

@@ -1,44 +1,26 @@
 """Stage A — punctuation/normalization over ``webdocs``.
 
 Spark-first equivalent of the reference's inference serving path
-(SURVEY.md §3.1): one ``mapInPandas`` stage whose inner code is the exact
-oracle module (``kgforge.textnorm.pipeline``), so the distributed output is
-byte-identical to the single-node reference semantics per url by
-construction. The tagger backend is a python-worker-local singleton
-(reference's child-process server, C1, maps to Spark's worker processes).
-
-Scale notes:
-- input projection is ``url, text, lang`` only → Parquet reader never
-  touches ``html`` (column pruning; verified in tests via ReadSchema);
-- Arrow batch size bounds per-batch padding and worker memory;
-- no shuffle: normalize is embarrassingly parallel per input partition.
+(SURVEY.md §3.1): one ``map_rows`` stage around the oracle ``punctuator``
+(kgforge.stages.rows — loop, tagger cache and byte-identity rationale), so
+the distributed output is byte-identical per url to the single-node
+reference. The projection is ``url, warc_ts, text, lang`` only, so the
+Parquet reader never touches ``html`` (verified in tests via ReadSchema).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from kgforge.textnorm.constants import (
-    DEFAULT_CHINESE_TAG_PUNCTUATOR_MAP,
-    DEFAULT_ENGLISH_TAG_PUNCTUATOR_MAP,
-)
-from kgforge.textnorm.pipeline import DEFAULT_MAX_SEQUENCE_LENGTH, punctuate_one
+from kgforge.stages.rows import _tag_map  # noqa: F401  (public import path)
+from kgforge.stages.rows import map_rows, punctuator
+from kgforge.textnorm.pipeline import DEFAULT_MAX_SEQUENCE_LENGTH
 
 NORM_SCHEMA = (
     "url string, warc_ts timestamp, lang string, text_norm string, "
     "labels array<string>, n_tokens int, n_chunks int"
 )
-
-
-def _tag_map(lang: str) -> dict:
-    return (
-        DEFAULT_CHINESE_TAG_PUNCTUATOR_MAP
-        if lang == "zh"
-        else DEFAULT_ENGLISH_TAG_PUNCTUATOR_MAP
-    )
 
 
 def normalize(
@@ -49,51 +31,13 @@ def normalize(
 ) -> DataFrame:
     """webdocs(url, warc_ts, html, text, lang) → norm_text(url, text_norm,
     labels, n_tokens, n_chunks)."""
+    punctuate = punctuator(backend, max_sequence_length, **backend_kwargs)
 
-    from kgforge.textnorm.constants import currency_regex_pattern
-
-    currency_pattern = currency_regex_pattern()  # driver-side scan, shipped
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgforge.textnorm.constants import prime_currency_pattern
-        from kgforge.textnorm.tagger import get_tagger
-
-        prime_currency_pattern(currency_pattern)
-        taggers: dict[str, object] = {}  # worker-local singletons per lang
-        for pdf in batches:
-            urls, langs, norms, labels_col, n_tokens, n_chunks = [], [], [], [], [], []
-            for url, text, lang in zip(
-                pdf["url"].tolist(), pdf["text"].tolist(), pdf["lang"].tolist()
-            ):
-                lang = lang or "en"
-                tagger = taggers.get(lang)
-                if tagger is None:
-                    tagger = get_tagger(backend, lang, **backend_kwargs)
-                    taggers[lang] = tagger
-                text_norm, labels = punctuate_one(
-                    text or "", tagger, _tag_map(lang), max_sequence_length
-                )
-                urls.append(url)
-                langs.append(lang)
-                norms.append(text_norm)
-                labels_col.append(labels)
-                n_tokens.append(len(labels))
-                n_chunks.append(
-                    max(1, -(-len(labels) // max_sequence_length))
-                )
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": pdf["warc_ts"].reset_index(drop=True),
-                    "lang": langs,
-                    "text_norm": norms,
-                    "labels": labels_col,
-                    "n_tokens": pd.Series(n_tokens, dtype="int32"),
-                    "n_chunks": pd.Series(n_chunks, dtype="int32"),
-                }
-            )
-
-    from pyspark.sql import functions as F
+    def emit(url, warc_ts, text, lang):
+        lang = lang or "en"
+        text_norm, labels = punctuate(text, lang)
+        n_chunks = max(1, -(-len(labels) // max_sequence_length))
+        yield url, warc_ts, lang, text_norm, labels, len(labels), n_chunks
 
     # warc_ts rides along (avoids re-joining webdocs later just for the
     # timestamp — a full url-keyed shuffle at scale); tolerate its absence.
@@ -103,4 +47,4 @@ def normalize(
         src = webdocs.select(
             "url", F.lit(None).cast("timestamp").alias("warc_ts"), "text", "lang"
         )
-    return src.mapInPandas(run, NORM_SCHEMA)
+    return map_rows(src, NORM_SCHEMA, emit)

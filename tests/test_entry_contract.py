@@ -51,3 +51,13 @@ def test_multimodal_fake_decode(spark):
     assert {k: tuple(v) for k, v in got.items()} == {
         k: tuple(v) for k, v in again.items()
     }
+
+
+def test_executors_get_repo_on_pythonpath(spark):
+    """Under a non-local master executors do not inherit the driver's
+    PYTHONPATH; get_spark ships the repo root so UDF closures can import
+    kgforge on any worker."""
+    import os
+
+    repo_root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    assert spark.conf.get("spark.executorEnv.PYTHONPATH") == repo_root

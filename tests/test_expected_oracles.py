@@ -5,6 +5,8 @@ at sf0.01 lives in tools/check_correctness.py; this locks the mechanism
 into the pytest suite."""
 
 import math
+import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -78,3 +80,17 @@ def test_pagerank_matches_expected_to_8dp(spark, expected_paths):
     }
     assert set(got) == set(want)
     assert all(math.isclose(got[n], want[n], abs_tol=1e-12) for n in got)
+
+
+def test_fingerprint_tracks_content_not_mtime(tmp_path):
+    from kgforge.fixtures.expected import _fingerprint
+
+    doc = tmp_path / "documents.parquet"
+    shutil.copyfile(f"{SF_DIR}/documents.parquet", doc)
+    stamp = _fingerprint(TIER, str(tmp_path))
+    os.utime(doc, (0, 0))
+    assert _fingerprint(TIER, str(tmp_path)) == stamp
+    data = bytearray(doc.read_bytes())
+    data[len(data) // 2] ^= 0xFF
+    doc.write_bytes(bytes(data))
+    assert _fingerprint(TIER, str(tmp_path)) != stamp

@@ -46,25 +46,21 @@ def test_no_hits():
 def test_fused_mention_docstream_equals_staged(spark):
     """The fused single-stage scan must equal the staged
     normalize → sentences → scan_mentions composition row-for-row."""
-    from kgforge.fixtures.gen import gen_alias_rows, gen_webdocs_rows
+    from kgforge.fixtures.gen import gen_alias_rows
     from kgforge.stages.docstream import scan_mentions_docstream
     from kgforge.stages.extract import sentences
     from kgforge.stages.link import scan_mentions
     from kgforge.stages.normalize import normalize
+    from tests.test_docstream import webdocs
 
-    docs = spark.createDataFrame(
-        [
-            (r["url"], r["warc_ts"], r["text"], r["lang"])
-            for r in gen_webdocs_rows(60)
-        ],
-        "url string, warc_ts timestamp, text string, lang string",
-    )
-    aliases = sorted({r["alias"] for r in gen_alias_rows(60)})
+    docs = webdocs(spark, 60)  # includes NULL-text/NULL-lang/empty docs
+    aliases = sorted({r["alias"] for r in gen_alias_rows(60)} | {"acme corp"})
     fused = sorted(map(tuple, scan_mentions_docstream(docs, aliases).collect()))
     staged = sorted(
         map(tuple, scan_mentions(sentences(normalize(docs)), aliases).collect())
     )
     assert fused == staged and fused
+    assert ("edge://null-lang", 0, "acme corp") in fused
 
 
 def test_spark_scan_matches_pure_matcher(spark):
