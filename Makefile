@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test tier1 test-fast bench correctness scaling pipeline zip clean
+.PHONY: test tier1 test-fast bench correctness scaling skew pipeline reference-baseline zip clean
 
 test:
 	$(PY) -m pytest tests/ -x -q

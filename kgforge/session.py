@@ -21,7 +21,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("KGFORGE_SHUFFLE_PARTITIONS", "32"))
@@ -69,9 +69,9 @@ def warm_python_workers(spark: SparkSession, cores: int) -> None:
     """Pay Python-worker startup BEFORE any timed phase: module imports
     plus the lazy one-time Unicode scans (currency_regex, ALL_PUNCS —
     ~1-2 s each, measured via cProfile) by pushing one real doc through
-    the full normalize+extract path in every worker slot. Shared by
-    bench.py and tools/_scaling_worker.py so the two timed harnesses can
-    never drift (steady-state methodology: at crawl scale worker spin-up
+    the full normalize+extract path in every worker slot. bench.py, the
+    one timed harness (its scaling runs included), calls it before its KG
+    phases (steady-state methodology: at crawl scale worker spin-up
     amortizes to zero)."""
 
     def _warm(batches):

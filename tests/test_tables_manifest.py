@@ -1,9 +1,12 @@
 """Manifest commit-protocol gates: corrupt/torn manifests read as
 uncommitted; stage-name mismatch is not committed; commit is atomic
-(no .tmp left behind)."""
+(no .tmp left behind); the committed totals come from the one lineage
+scan and equal a whole-table checksum."""
 
 import json
 import os
+
+import pytest
 
 from kgforge.io import tables
 
@@ -35,3 +38,47 @@ def test_write_table_commit_atomic(spark, tmp_path):
     assert not os.path.exists(tables.manifest_path(d) + ".tmp")
     assert len(m["lineage"]) >= 1
     assert sum(e["output_rows"] for e in m["lineage"]) == 10
+
+
+def _seven_files(spark):
+    return spark.range(70).selectExpr("id", "id * 2 as v").repartition(7)
+
+
+def _empty(spark):
+    return spark.range(0).selectExpr("id", "cast(id as string) as s")
+
+
+def _null_bearing(spark):
+    return spark.createDataFrame(
+        [(1, None), (None, "b"), (None, None), (4, "d")], "k long, s string"
+    )
+
+
+@pytest.mark.parametrize("collect_lineage", [True, False])
+@pytest.mark.parametrize("make", [_seven_files, _empty, _null_bearing])
+def test_manifest_totals_equal_table_checksum(spark, tmp_path, make, collect_lineage):
+    """The manifest's row count and checksum, summed from the per-partition
+    lineage, equal a whole-table scan's; collect_lineage only decides
+    whether the lineage rows are stored."""
+    d = str(tmp_path / "t")
+    m = tables.write_table(make(spark), d, "s", collect_lineage=collect_lineage)
+    assert (m["row_count"], m["checksum"]) == tables.table_checksum(
+        spark.read.parquet(d)
+    )
+    if make is _seven_files:
+        assert m["row_count"] == 70
+        if collect_lineage:
+            assert len(m["lineage"]) > 1
+    if make is _empty:
+        assert (m["row_count"], m["checksum"]) == (0, "0")
+    if not collect_lineage:
+        assert m["lineage"] == []
+
+
+def test_write_table_scans_once(spark, tmp_path, monkeypatch):
+    def rescan(df):
+        raise AssertionError("write_table re-scanned the table for its checksum")
+
+    monkeypatch.setattr(tables, "table_checksum", rescan)
+    m = tables.write_table(spark.range(5), str(tmp_path / "t"), "s")
+    assert m["row_count"] == 5

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Scaling bench: identical input at local[8] vs local[32] (sandbox
+"""Scaling bench: identical input at two parallelism levels (sandbox
 stand-in for N vs 4N executor clusters per the north rule); reports
 throughput at both levels + scaling efficiency and appends the table to
-BENCH.md. Each level runs in its own subprocess (a JVM's master is fixed
-at startup)."""
+BENCH.md. Each level is one ``bench.py kg_refdata kg_docstream`` run in
+its own subprocess (a JVM's master is fixed at startup) on one shared
+fixture, which the first run generates."""
 
 from __future__ import annotations
 
@@ -15,7 +16,6 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -29,25 +29,13 @@ def main() -> int:
         "8,32 also supported",
     )
     ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--fixture-dir", default=None, help="reuse existing fixture")
+    ap.add_argument(
+        "--fixture-dir", default=None, help="reuse its fixture, or generate one there"
+    )
     ap.add_argument("--out-md", default=os.path.join(REPO, "BENCH.md"))
     args = ap.parse_args()
 
-    from kgforge.fixtures.gen import write_fixture_tables
-    from kgforge.session import get_spark
-
-    if args.fixture_dir and os.path.exists(
-        os.path.join(args.fixture_dir, "webdocs.parquet")
-    ):
-        fx = args.fixture_dir
-        webdocs = os.path.join(fx, "webdocs.parquet")
-        alias = os.path.join(fx, "alias_dict.parquet")
-    else:
-        fx = args.fixture_dir or tempfile.mkdtemp(prefix="kgforge_scaling_")
-        spark = get_spark("kgforge-scaling-gen", master="local[32]")
-        webdocs, alias = write_fixture_tables(spark, fx, args.docs, partitions=256)
-        spark.stop()
-
+    fx = args.fixture_dir or tempfile.mkdtemp(prefix="kgforge_scaling_")
     levels = [int(c) for c in args.levels.split(",")]
     best: dict[int, dict] = {}
     # interleave repeats (8,32,8,32,...) and keep the best run per level —
@@ -57,16 +45,17 @@ def main() -> int:
             proc = subprocess.run(
                 [
                     sys.executable,
-                    os.path.join(REPO, "tools", "_scaling_worker.py"),
-                    "--master",
-                    f"local[{cores}]",
-                    "--webdocs",
-                    webdocs,
-                    "--alias",
-                    alias,
-                    "--cores",
-                    str(cores),
+                    os.path.join(REPO, "bench.py"),
+                    "kg_refdata",
+                    "kg_docstream",
+                    "--fixture",
+                    fx,
                 ],
+                env={
+                    **os.environ,
+                    "SPARK_GRAFT_CPUS": str(cores),
+                    "KGFORGE_BENCH_DOCS": str(args.docs),
+                },
                 capture_output=True,
                 text=True,
             )
@@ -75,12 +64,19 @@ def main() -> int:
                 # a repeat-2 worker crash left nothing to diagnose)
                 sys.stderr.write(proc.stderr[-4000:] + "\n")
                 raise SystemExit(
-                    f"scaling worker local[{cores}] failed "
-                    f"(rc={proc.returncode})"
+                    f"bench.py at local[{cores}] failed (rc={proc.returncode})"
                 )
-            line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
-            r = json.loads(line)
-            print(line)
+            out = json.loads(proc.stdout.splitlines()[-1])
+            elapsed = out["min"]["kg_docstream"]
+            r = {
+                "cores": cores,
+                "n_docs": out["docs"],
+                "n_edges": out["results"]["kg_docstream"],
+                "elapsed_sec": elapsed,
+                "docs_per_sec": round(out["docs"] / elapsed, 2),
+                "phases": out["min"],
+            }
+            print(json.dumps(r))
             if cores not in best or r["elapsed_sec"] < best[cores]["elapsed_sec"]:
                 best[cores] = r
     results = [best[c] for c in sorted(best)]
