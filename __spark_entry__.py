@@ -31,17 +31,20 @@ from pyspark.sql import functions as F
 _FIXTURE_DOCS = {"sf0.001": 300, "sf0.01": 1000, "sf0.1": 2000}
 
 
+def _fixture_docs(sf_dir: str) -> int:
+    """Doc count of the in-memory KG fixture for an sf tier directory."""
+    return _FIXTURE_DOCS.get(sf_dir.rstrip("/").rsplit("/", 1)[-1], 300)
+
+
 def _fixture_webdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic in-memory webdocs fixture sized by the sf tier
     (FIXTURES.md §1 — the KG payload table; /root/testdata holds the
     generic harness tables, not the KG input)."""
     from kgforge.fixtures.gen import gen_webdocs_rows
 
-    tier = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    n = _FIXTURE_DOCS.get(tier, 300)
     rows = [
         (r["url"], r["warc_ts"], r["text"], r["lang"])
-        for r in gen_webdocs_rows(n)
+        for r in gen_webdocs_rows(_fixture_docs(sf_dir))
     ]
     return spark.createDataFrame(
         rows, "url string, warc_ts timestamp, text string, lang string"
@@ -51,11 +54,9 @@ def _fixture_webdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fixture_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.fixtures.gen import gen_alias_rows
 
-    tier = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    n = _FIXTURE_DOCS.get(tier, 300)
     rows = [
         (r["alias"], r["entity_id"], r["canon"], r["prior"])
-        for r in gen_alias_rows(n)
+        for r in gen_alias_rows(_fixture_docs(sf_dir))
     ]
     return spark.createDataFrame(
         rows, "alias string, entity_id string, canon string, prior double"
@@ -97,18 +98,21 @@ def _kg_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return link(mentions(trip), _fixture_alias(spark, sf_dir))
 
 
+def _fixture_mention_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(mention, canon_id) over the fixture's resolved alias dictionary."""
+    from kgforge.stages.canonicalize import mention_map
+    from kgforge.stages.link import alias_resolution
+
+    return mention_map(alias_resolution(_fixture_alias(spark, sf_dir)))
+
+
 def _kg_edges_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgforge.stages.canonicalize import rewrite_triples
     from kgforge.stages.extract import sentences, triples
-    from kgforge.stages.link import alias_resolution
     from kgforge.stages.normalize import normalize
 
-    alias_df = _fixture_alias(spark, sf_dir)
-    mention_map = alias_resolution(alias_df).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
     trip = triples(sentences(normalize(_fixture_webdocs(spark, sf_dir))))
-    edges = rewrite_triples(trip, mention_map)
+    edges = rewrite_triples(trip, _fixture_mention_map(spark, sf_dir))
     return (
         edges.groupBy("subj_id", "pred", "obj_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -149,18 +153,8 @@ def _kg_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python-defined iteration → rows-only check (gated by
     tests/test_pagerank.py vs a pure-Python oracle)."""
     from kgforge.graph.pagerank import pagerank
-    from kgforge.stages.canonicalize import rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-    from kgforge.stages.link import alias_resolution
 
-    alias_df = _fixture_alias(spark, sf_dir)
-    mention_map = alias_resolution(alias_df).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    edges = rewrite_triples(
-        extract_docstream(_fixture_webdocs(spark, sf_dir)), mention_map
-    )
-    graph = edges.select(
+    graph = _kg_day_edges(spark, sf_dir).select(
         F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     )
     ranks = pagerank(graph, iterations=8)
@@ -171,11 +165,9 @@ def _kg_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-text mention detection (gazetteer scan, kgforge.stages.link.
-    scan_mentions): alias occurrences in every normalized sentence, linked
-    to canonical ids via the broadcast alias map; top-20 entities by
-    mention count. Oracle: expected parquet from the shared pure matcher."""
+def _fixture_linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(url, sent_id, canon_id) per gazetteer hit in the fixture text,
+    linked through the broadcast alias map (one row per hit)."""
     from kgforge.linking.guard import collect_bounded
     from kgforge.stages.docstream import scan_mentions_docstream
     from kgforge.stages.link import alias_resolution
@@ -184,11 +176,19 @@ def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     aliases = collect_bounded(alias_df, "alias", what="gazetteer alias dictionary")
     hits = scan_mentions_docstream(_fixture_webdocs(spark, sf_dir), aliases)
     amap = alias_resolution(alias_df)
-    linked = hits.join(
+    return hits.join(
         F.broadcast(amap), hits["mention"] == amap["alias"]
-    ).select("canon_id")
+    ).select("url", "sent_id", "canon_id")
+
+
+def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """In-text mention detection (gazetteer scan, kgforge.stages.link.
+    scan_mentions): alias occurrences in every normalized sentence, linked
+    to canonical ids via the broadcast alias map; top-20 entities by
+    mention count. Oracle: expected parquet from the shared pure matcher."""
     return (
-        linked.groupBy("canon_id")
+        _fixture_linked_mentions(spark, sf_dir)
+        .groupBy("canon_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("canon_id"))
         .limit(20)
@@ -221,19 +221,7 @@ def _kg_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity co-occurrence edges: canonical entities co-mentioned in one
     sentence (gazetteer scan → alias map → within-sentence pairs); top-20
     pairs by count. Oracle: expected parquet from the shared matcher."""
-    from kgforge.linking.guard import collect_bounded
-    from kgforge.stages.docstream import scan_mentions_docstream
-    from kgforge.stages.link import alias_resolution
-
-    alias_df = _fixture_alias(spark, sf_dir)
-    aliases = collect_bounded(alias_df, "alias", what="gazetteer alias dictionary")
-    hits = scan_mentions_docstream(_fixture_webdocs(spark, sf_dir), aliases)
-    amap = alias_resolution(alias_df)
-    ents = (
-        hits.join(F.broadcast(amap), hits["mention"] == amap["alias"])
-        .select("url", "sent_id", "canon_id")
-        .distinct()
-    )
+    ents = _fixture_linked_mentions(spark, sf_dir).distinct()
     a = ents.alias("a")
     b = ents.alias("b")
     pairs = a.join(
@@ -254,18 +242,7 @@ def _kg_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics beside PageRank: total-degree histogram of the
     canonical entity graph (distinct edges; degree = in + out). Top-30
     degree values by node count. Oracle: expected parquet twin."""
-    from kgforge.stages.canonicalize import rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-    from kgforge.stages.link import alias_resolution
-
-    alias_df = _fixture_alias(spark, sf_dir)
-    mention_map = alias_resolution(alias_df).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    edges = rewrite_triples(
-        extract_docstream(_fixture_webdocs(spark, sf_dir)), mention_map
-    )
-    e = edges.select(
+    e = _kg_day_edges(spark, sf_dir).select(
         F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     ).distinct()
     deg = (
@@ -286,14 +263,12 @@ def _kg_day_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared temporal-edge builder: canonical edges + UTC day column."""
     from kgforge.stages.canonicalize import edges_with_day, rewrite_triples
     from kgforge.stages.docstream import extract_docstream
-    from kgforge.stages.link import alias_resolution
 
-    alias_df = _fixture_alias(spark, sf_dir)
-    mention_map = alias_resolution(alias_df).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
     return edges_with_day(
-        rewrite_triples(extract_docstream(_fixture_webdocs(spark, sf_dir)), mention_map)
+        rewrite_triples(
+            extract_docstream(_fixture_webdocs(spark, sf_dir)),
+            _fixture_mention_map(spark, sf_dir),
+        )
     )
 
 

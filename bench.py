@@ -63,7 +63,7 @@ from kgforge.queries import (
     ngram_jaccard_verified_pairs,
 )
 from kgforge.session import get_spark, warm_python_workers
-from kgforge.stages.canonicalize import edges_with_day, rewrite_triples
+from kgforge.stages.canonicalize import edges_with_day, mention_map, rewrite_triples
 from kgforge.stages.docstream import extract_docstream, scan_mentions_docstream
 from kgforge.stages.link import alias_resolution
 from kgforge.stages.normalize import normalize
@@ -206,8 +206,9 @@ class Bench:
 
     @_once
     def mention_map(self):
-        alias_map = alias_resolution(self.alias_df).localCheckpoint()
-        return alias_map.select(F.col("alias").alias("mention"), "canon_id")
+        # the body's ``mention_map`` is the canonicalize helper (methods do
+        # not see class scope)
+        return mention_map(alias_resolution(self.alias_df).localCheckpoint())
 
     @_once
     def aliases(self) -> list[str]:

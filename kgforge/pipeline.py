@@ -12,10 +12,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgforge.io import tables
-from kgforge.stages.canonicalize import edges_with_day, rewrite_triples
+from kgforge.stages.canonicalize import edges_with_day, mention_map, rewrite_triples
 from kgforge.stages.extract import sentences, triples
 from kgforge.stages.link import alias_resolution, link_with_map, mentions
 from kgforge.stages.normalize import normalize
@@ -69,15 +68,10 @@ def run_pipeline(
     sent = stage("sentences", lambda: (sentences(norm), None))
     trip = stage("triples_raw", lambda: (triples(sent), None))
     stage("entities", lambda: (link_with_map(mentions(trip), alias_map), None))
-    mention_map = alias_map.select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
+    mention_ids = mention_map(alias_map)
     edges = stage(
         "edges",
-        lambda: (
-            edges_with_day(rewrite_triples(trip, mention_map)),
-            ["day"],
-        ),
+        lambda: (edges_with_day(rewrite_triples(trip, mention_ids)), ["day"]),
     )
 
     if analytics:

@@ -26,6 +26,12 @@ EDGES_SCHEMA = (
 )
 
 
+def mention_map(alias_map: DataFrame) -> DataFrame:
+    """``alias_resolution`` output → the (mention, canon_id) map that
+    ``rewrite_triples`` joins on."""
+    return alias_map.select(F.col("alias").alias("mention"), "canon_id")
+
+
 def rewrite_triples(triples_df: DataFrame, mention_map: DataFrame) -> DataFrame:
     """triples_raw → edges with canonical subject/object ids (two broadcast
     joins on the small mention map)."""

@@ -2,10 +2,11 @@
 
 The reference is batch-only; the engine's incremental path treats newly
 arriving ``webdocs`` files as a stream: ``readStream`` on the input
-directory, ``Trigger.AvailableNow`` (drain everything present, then stop —
-idempotent catch-up runs), watermark on ``warc_ts`` for bounded state, and
-``foreachBatch`` feeding the SAME batch stages (normalize → sentences →
-triples), so streaming and batch semantics cannot diverge.
+directory (``_webdocs_stream``), ``Trigger.AvailableNow`` (drain everything
+present, then stop — idempotent catch-up runs), watermark on ``warc_ts``
+for bounded state, and ``foreachBatch`` (``_start_batches``) feeding the
+SAME batch stages (normalize → sentences → triples), so streaming and batch
+semantics cannot diverge.
 
 Delivery semantics: Structured Streaming's checkpoint makes ``foreachBatch``
 *at-least-once* — a crash between the sink write and the checkpoint commit
@@ -14,6 +15,28 @@ duplicate rows, so every batch is written to a deterministic
 ``batch_id=<id>`` subdirectory in ``overwrite`` mode
 (``write_batch_idempotent``): a replay overwrites its own previous output
 and the sink is effectively exactly-once for a fixed checkpoint lineage.
+
+Exactly-once state: the three state streams (``stream_upsert_edge_latest``,
+``stream_degree_over_time``, ``stream_bgp_view``) MERGE each micro-batch
+into standing tables, and all run one protocol, ``_stream_versioned_state``.
+State versions are ``<prefix><batch_id>`` parquet dirs under the state dir;
+a ``_LATEST`` marker ``{"checkpoint": <lineage id>, "batch_id": <id>}``
+names the current one. The lineage id is a uuid minted into the checkpoint
+dir (``_checkpoint_identity``), not its path, because a checkpoint recreated
+at the same path restarts batch ids. Per batch: read the marker under that
+id (``_marker_last_applied``) and skip a batch id ≤ the marker's (a replay
+of a merged batch); a marker from another lineage raises, since skipping
+(new ids ≤ old pointer) or re-merging (availableNow re-lists all input under
+a fresh checkpoint) would corrupt the state. Then write every version the
+stream's ``step`` returns with overwrite (a replayed half-written version
+clobbers itself), and flip the marker LAST by atomic rename
+(``_flip_marker``): a crash before the flip leaves the previous version
+current and the replay re-applies the batch.
+
+Scale path: these offline stand-ins rewrite the full state per batch; on a
+real deployment each merge is an Iceberg/Delta ``MERGE INTO`` on the state's
+key columns (the cumulative edge sets are the day-partitioned edge table,
+touching only the batch's days), so per-batch IO tracks the batch.
 """
 
 from __future__ import annotations
@@ -42,6 +65,45 @@ def write_batch_idempotent(
     w.parquet(f"{output_dir}/batch_id={batch_id}")
 
 
+def _webdocs_stream(
+    spark: SparkSession,
+    input_dir: str,
+    max_files_per_trigger: int | None = None,
+    watermark: str = "1 day",
+) -> DataFrame:
+    """The webdocs parquet directory as a stream, watermarked on warc_ts."""
+    reader = spark.readStream.schema(WEBDOCS_DDL).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.load(input_dir).withWatermark("warc_ts", watermark)
+
+
+def _start_batches(stream: DataFrame, process_batch, checkpoint_dir: str):
+    """Start an AvailableNow ``foreachBatch`` query; returns the
+    StreamingQuery (caller awaits termination)."""
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _batch_edges(spark: SparkSession, alias_map_path: str, backend: str):
+    """Per-batch canonical edges for the edge streams: fused docstream
+    (normalize + sentence split + triple extraction) → canonical rewrite
+    against the alias map, which is loaded once at stream start."""
+    from kgforge.stages.canonicalize import mention_map, rewrite_triples
+    from kgforge.stages.docstream import extract_docstream
+
+    mention_ids = mention_map(spark.read.parquet(alias_map_path))
+
+    def edges(batch_df: DataFrame) -> DataFrame:
+        return rewrite_triples(extract_docstream(batch_df, backend=backend), mention_ids)
+
+    return edges
+
+
 def stream_normalize_to_parquet(
     spark: SparkSession,
     input_dir: str,
@@ -54,25 +116,13 @@ def stream_normalize_to_parquet(
     Returns the StreamingQuery (caller awaits termination)."""
     from kgforge.stages.normalize import normalize
 
-    reader = (
-        spark.readStream.schema(WEBDOCS_DDL)
-        .format("parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir).withWatermark("warc_ts", "1 day")
-
     def process_batch(batch_df, batch_id: int):
         write_batch_idempotent(
             normalize(batch_df, backend=backend), output_dir, batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _webdocs_stream(spark, input_dir, max_files_per_trigger)
+    return _start_batches(stream, process_batch, checkpoint_dir)
 
 
 def stream_extract_edges(
@@ -88,33 +138,16 @@ def stream_extract_edges(
     against the precomputed alias map → idempotent batch_id-keyed append to
     the edges table (see module docstring: checkpoint dedups inputs,
     overwrite-per-batch dedups replayed outputs) (SURVEY.md §2.10)."""
-    from pyspark.sql import functions as F
+    from kgforge.stages.canonicalize import edges_with_day
 
-    from kgforge.stages.canonicalize import edges_with_day, rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-
-    mention_map = spark.read.parquet(alias_map_path).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    stream = (
-        spark.readStream.schema(WEBDOCS_DDL)
-        .format("parquet")
-        .load(input_dir)
-        .withWatermark("warc_ts", "1 day")
-    )
+    batch_edges = _batch_edges(spark, alias_map_path, backend)
 
     def process_batch(batch_df, batch_id: int):
-        edges = edges_with_day(
-            rewrite_triples(extract_docstream(batch_df, backend=backend), mention_map)
-        )
+        edges = edges_with_day(batch_edges(batch_df))
         write_batch_idempotent(edges, output_dir, batch_id, partition_by=["day"])
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _webdocs_stream(spark, input_dir)
+    return _start_batches(stream, process_batch, checkpoint_dir)
 
 
 def _checkpoint_identity(checkpoint_dir: str) -> str:
@@ -122,8 +155,7 @@ def _checkpoint_identity(checkpoint_dir: str) -> str:
     use, NOT the directory path: a deleted-and-recreated checkpoint at the
     same path restarts batch ids, gets a fresh uuid, and trips the loud
     mismatch in ``_marker_last_applied`` instead of silently skipping
-    every batch (round-4 review pass 2, finding #3). Shared by every
-    state-maintaining foreachBatch stream."""
+    every batch (round-4 review pass 2, finding #3)."""
     import os
     import uuid
 
@@ -134,7 +166,29 @@ def _checkpoint_identity(checkpoint_dir: str) -> str:
         with open(tmp_id, "w") as f:
             f.write(uuid.uuid4().hex)
         os.replace(tmp_id, id_file)
-    return open(id_file).read().strip()
+    with open(id_file) as f:
+        return f.read().strip()
+
+
+def _read_marker(marker: str) -> dict | None:
+    """The ``_LATEST`` record (None before the first applied batch). The
+    pre-lineage plain-int format is refused: that state cannot be resumed
+    safely."""
+    import json
+    import os
+
+    if not os.path.exists(marker):
+        return None
+    with open(marker) as f:
+        rec = json.load(f)
+    if not isinstance(rec, dict):
+        raise RuntimeError(
+            f"state marker at {marker} uses the legacy plain-int format:"
+            " this state predates checkpoint-lineage tracking and cannot"
+            " be safely resumed. Start from an empty state dir (or rebuild"
+            " from the batch recompute)."
+        )
+    return rec
 
 
 def _marker_last_applied(
@@ -144,41 +198,24 @@ def _marker_last_applied(
     guard; returns the last applied batch id (-1 when no marker).
 
     Legacy PATH-format markers (pre-uuid) are accepted ONLY when the
-    checkpoint contains the streaming OFFSETS record for the marker's
-    batch id (written before the batch ran — so the crash window where
-    the marker flipped but the commit was never written is accepted and
-    replay-skipped, not refused) — a path match alone is NOT lineage
-    continuity: a checkpoint deleted and recreated at the same path
-    restarts batch ids at 0, and accepting the stale marker would skip
-    every replayed batch forever (round-5 ADVICE). On acceptance the
-    marker is rewritten with the uuid IMMEDIATELY. Any other identity
-    mismatch raises."""
-    import json
+    checkpoint holds the OFFSETS record for the marker's batch id, and are
+    then rewritten with the uuid IMMEDIATELY: a path match alone is not
+    lineage continuity, since a checkpoint recreated at the same path
+    restarts batch ids at 0 and the stale marker would skip every replayed
+    batch forever (round-5 ADVICE). Any other identity mismatch raises."""
     import os
 
-    if not os.path.exists(marker):
+    rec = _read_marker(marker)
+    if rec is None:
         return -1
-    rec = json.loads(open(marker).read())
-    if not isinstance(rec, dict):
-        raise RuntimeError(
-            f"state marker at {marker} uses the legacy plain-int format:"
-            " this state predates checkpoint-lineage tracking and cannot"
-            " be safely resumed. Start from an empty state dir (or rebuild"
-            " from the batch recompute)."
-        )
     if rec["checkpoint"] == os.path.abspath(checkpoint_dir):
-        # continuity witness = offsets/<id>, NOT commits/<id>: Spark writes
-        # the offsets record BEFORE running batch id, so it exists in every
-        # state this marker could legally describe — including the crash
-        # window where foreachBatch flipped the marker but the commit
-        # record was never written (that replay is exactly what the
-        # batch_id <= last_applied guard handles). A checkpoint deleted
-        # and recreated at the same path that never reached this batch id
-        # has no offsets/<id> and is refused. Residual (documented) limit:
-        # a recreated checkpoint independently re-run PAST this batch id
-        # against a different state dir, then re-pointed here, passes —
-        # only the uuid identity (written on acceptance, below) closes
-        # that for all subsequent runs.
+        # witness = offsets/<id>, NOT commits/<id>: Spark writes offsets
+        # BEFORE running the batch, so it exists in the crash window where
+        # the marker flipped but the commit was never written (the replay
+        # the batch_id <= last_applied guard skips). Residual limit: a
+        # recreated checkpoint re-run PAST this id against another state
+        # dir, then re-pointed here, passes; the uuid written on
+        # acceptance closes that for every later run.
         offsets_file = os.path.join(
             checkpoint_dir, "offsets", str(int(rec["batch_id"]))
         )
@@ -218,13 +255,43 @@ def _flip_marker(marker: str, ckpt_identity: str, batch_id: int) -> None:
     os.replace(tmp, marker)
 
 
-def _edge_latest_agg(edges: DataFrame) -> DataFrame:
-    """Per-edge upsert record for one micro-batch — the SHARED batch
-    definition (graph.analytics.edge_latest_state), so the streaming state
-    and the batch table cannot drift."""
-    from kgforge.graph.analytics import edge_latest_state
+def _stream_versioned_state(
+    spark: SparkSession,
+    input_dir: str,
+    alias_map_path: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    backend: str,
+    max_files_per_trigger: int | None,
+    step,
+):
+    """Start a state stream under the module docstring's exactly-once
+    protocol. ``step(sess, edges)`` receives one new batch's canonical
+    edges and returns ``{prefix: df}``: the next version of each state
+    table, written in that order to ``<prefix><batch_id>`` before the
+    marker flips."""
+    import os
 
-    return edge_latest_state(edges)
+    batch_edges = _batch_edges(spark, alias_map_path, backend)
+    stream = _webdocs_stream(spark, input_dir, max_files_per_trigger)
+    os.makedirs(state_dir, exist_ok=True)
+    ckpt_identity = _checkpoint_identity(checkpoint_dir)
+    marker = os.path.join(state_dir, "_LATEST")
+
+    def process_batch(batch_df, batch_id: int):
+        last_applied = _marker_last_applied(
+            marker, checkpoint_dir, ckpt_identity, state_dir
+        )
+        if batch_id <= last_applied:
+            return  # replay of an already-merged batch — exactly-once skip
+        versions = step(batch_df.sparkSession, batch_edges(batch_df))
+        for prefix, df in versions.items():
+            df.write.mode("overwrite").parquet(
+                os.path.join(state_dir, f"{prefix}{batch_id}")
+            )
+        _flip_marker(marker, ckpt_identity, batch_id)
+
+    return _start_batches(stream, process_batch, checkpoint_dir)
 
 
 def merge_edge_states(cur: DataFrame | None, batch_agg: DataFrame) -> DataFrame:
@@ -257,21 +324,14 @@ def merge_edge_states(cur: DataFrame | None, batch_agg: DataFrame) -> DataFrame:
 def _read_versioned_state(
     spark: SparkSession, state_dir: str, prefix: str
 ) -> DataFrame | None:
-    """Shared reader for the incremental streams' versioned state tables
-    (``<prefix><batch_id>`` parquet + ``_LATEST`` marker; None before the
-    first applied batch; loud error on the legacy plain-int marker)."""
-    import json
+    """Shared reader for the state streams' versioned tables: the
+    ``<prefix><batch_id>`` version the ``_LATEST`` marker names (None
+    before the first applied batch)."""
     import os
 
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
+    rec = _read_marker(os.path.join(state_dir, "_LATEST"))
+    if rec is None:
         return None
-    rec = json.loads(open(marker).read())
-    if not isinstance(rec, dict):
-        raise RuntimeError(
-            f"state marker at {marker} uses the legacy plain-int format; "
-            "rebuild the state (see stream_upsert_edge_latest)."
-        )
     return spark.read.parquet(
         os.path.join(state_dir, f"{prefix}{rec['batch_id']}")
     )
@@ -294,61 +354,18 @@ def stream_upsert_edge_latest(
 ):
     """Incremental LATEST-WINS edge maintenance (§2.10 + the batch
     ``kg_edge_latest`` analog): each micro-batch's canonical edges are
-    aggregated and MERGED into a compacted per-edge state table
-    (count + latest (warc_ts, url) witness) instead of appended — the
-    stream maintains the serving table a batch job would recompute.
+    aggregated by the batch definition (``graph.analytics.edge_latest_state``)
+    and MERGED into the per-edge state ``state_v<id>`` (count + latest
+    (warc_ts, url) witness) — the serving table a batch job would recompute."""
+    from kgforge.graph.analytics import edge_latest_state
 
-    Exactly-once merge under at-least-once foreachBatch: state versions are
-    written to ``state_v<batch_id>`` (overwrite — a replayed half-written
-    version clobbers itself) and the ``_LATEST`` pointer is flipped LAST
-    via atomic rename; a replayed batch_id ≤ the pointer is skipped, so a
-    crash between sink write and checkpoint commit cannot double-count.
-    Batch ids are only comparable WITHIN one checkpoint lineage — the
-    pointer records the checkpoint identity, and a run against existing
-    state from a DIFFERENT checkpoint fails loudly instead of silently
-    skipping (new ids ≤ old pointer) or double-merging (availableNow
-    re-lists all input under a fresh checkpoint).
+    def step(sess, edges):
+        cur = read_edge_latest_state(sess, state_dir)
+        return {"state_v": merge_edge_states(cur, edge_latest_state(edges))}
 
-    Scale path: this offline stand-in rewrites the full state per batch;
-    on a real deployment the same merge is an Iceberg/Delta ``MERGE INTO``
-    keyed on (subj_id, pred, obj_id) — or hash-bucketed state directories
-    where only buckets touched by the batch rewrite — so per-batch IO is
-    proportional to the batch, not the table."""
-    import os
-
-    from kgforge.stages.canonicalize import rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-
-    mention_map = spark.read.parquet(alias_map_path).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    reader = spark.readStream.schema(WEBDOCS_DDL).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir).withWatermark("warc_ts", "1 day")
-    os.makedirs(state_dir, exist_ok=True)
-    ckpt_identity = _checkpoint_identity(checkpoint_dir)
-
-    def process_batch(batch_df, batch_id: int):
-        marker = os.path.join(state_dir, "_LATEST")
-        last_applied = _marker_last_applied(
-            marker, checkpoint_dir, ckpt_identity, state_dir
-        )
-        if batch_id <= last_applied:
-            return  # replay of an already-merged batch — exactly-once skip
-        cur = read_edge_latest_state(batch_df.sparkSession, state_dir)
-        batch_agg = _edge_latest_agg(
-            rewrite_triples(extract_docstream(batch_df, backend=backend), mention_map)
-        )
-        out = os.path.join(state_dir, f"state_v{batch_id}")
-        merge_edge_states(cur, batch_agg).write.mode("overwrite").parquet(out)
-        _flip_marker(marker, ckpt_identity, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_versioned_state(
+        spark, input_dir, alias_map_path, state_dir, checkpoint_dir,
+        backend, max_files_per_trigger, step,
     )
 
 
@@ -365,13 +382,10 @@ def _advance_distinct_edges(
     batch_edges: DataFrame,
     key_cols: list[str],
 ) -> tuple[DataFrame | None, DataFrame, DataFrame]:
-    """Shared cumulative-distinct-edge-set step for the incremental
-    streams: anti-join the batch's distinct keys against the standing set
-    (``<prefix><id>`` under the ``_LATEST`` marker), localCheckpoint the
-    delta (it feeds several joins), and return (cur_edges, new_edges,
-    all_edges) — cur_edges is None on the first batch. The caller writes
-    ``all_edges`` to ``<prefix><batch_id>`` and flips the marker LAST —
-    this helper never touches the marker."""
+    """Cumulative distinct edge set of the degree and BGP streams:
+    anti-join the batch's distinct keys against the standing ``<prefix>``
+    version, localCheckpoint that delta (it feeds several joins), and return
+    (cur_edges or None on the first batch, new_edges, all_edges)."""
     cur = _read_versioned_state(spark, state_dir, prefix)
     if cur is None:
         new = batch_edges.localCheckpoint()
@@ -402,49 +416,17 @@ def stream_degree_over_time(
     (the cumulative distinct edge set) and ``degree_v<id>``. A batch's
     NEW edges = batch-distinct edges anti-joined against the standing set;
     only their endpoint contributions merge into the degree table (full
-    outer sum). Exactly-once discipline is shared with
-    ``stream_upsert_edge_latest`` (same uuid lineage identity, versioned
-    overwrite writes, atomic ``_LATEST`` flip last, replayed batch ids
-    skipped).
+    outer sum)."""
+    from kgforge.stages.canonicalize import edges_with_day
 
-    Scale path: offline stand-in rewrites both state tables per batch; in
-    production the edge set is the day-partitioned edge table itself
-    (MERGE INTO on (day, src, dst) touching only the batch's day
-    partitions) and the degree merge is a MERGE INTO keyed on (day, node)
-    — per-batch IO proportional to the batch's days, not history."""
-    import os
-
-    from kgforge.stages.canonicalize import edges_with_day, rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
-
-    mention_map = spark.read.parquet(alias_map_path).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    reader = spark.readStream.schema(WEBDOCS_DDL).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir).withWatermark("warc_ts", "1 day")
-    os.makedirs(state_dir, exist_ok=True)
-    ckpt_identity = _checkpoint_identity(checkpoint_dir)
-
-    def process_batch(batch_df, batch_id: int):
-        sess = batch_df.sparkSession
-        marker = os.path.join(state_dir, "_LATEST")
-        last_applied = _marker_last_applied(
-            marker, checkpoint_dir, ckpt_identity, state_dir
-        )
-        if batch_id <= last_applied:
-            return
-        edges = edges_with_day(
-            rewrite_triples(extract_docstream(batch_df, backend=backend), mention_map)
-        )
-        batch_edges = edges.select(
+    def step(sess, edges):
+        batch_edges = edges_with_day(edges).select(
             "day", F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
         ).distinct()
         _cur, new_edges, all_edges = _advance_distinct_edges(
             sess, state_dir, "edges_v", batch_edges, ["day", "src", "dst"]
         )
-        new_deg = (
+        deg = (
             new_edges.select("day", F.col("src").alias("node"))
             .unionAll(new_edges.select("day", F.col("dst").alias("node")))
             .groupBy("day", "node")
@@ -452,35 +434,20 @@ def stream_degree_over_time(
         )
         cur_deg = read_degree_state(sess, state_dir)
         if cur_deg is not None:
-            d = new_deg.select(
-                "day", "node", F.col("degree").alias("degree_b")
+            d = deg.select("day", "node", F.col("degree").alias("degree_b"))
+            deg = cur_deg.join(d, ["day", "node"], "full_outer").select(
+                "day",
+                "node",
+                (
+                    F.coalesce(F.col("degree"), F.lit(0))
+                    + F.coalesce(F.col("degree_b"), F.lit(0))
+                ).alias("degree"),
             )
-            merged = (
-                cur_deg.join(d, ["day", "node"], "full_outer")
-                .select(
-                    "day",
-                    "node",
-                    (
-                        F.coalesce(F.col("degree"), F.lit(0))
-                        + F.coalesce(F.col("degree_b"), F.lit(0))
-                    ).alias("degree"),
-                )
-            )
-        else:
-            merged = new_deg
-        all_edges.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"edges_v{batch_id}")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"degree_v{batch_id}")
-        )
-        _flip_marker(marker, ckpt_identity, batch_id)
+        return {"edges_v": all_edges, "degree_v": deg}
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_versioned_state(
+        spark, input_dir, alias_map_path, state_dir, checkpoint_dir,
+        backend, max_files_per_trigger, step,
     )
 
 
@@ -494,12 +461,7 @@ def stream_windowed_doc_counts(
 ):
     """Watermarked tumbling-window doc counts per lang — the standard
     late-data-tolerant streaming aggregate, append-mode output."""
-    stream = (
-        spark.readStream.schema(WEBDOCS_DDL)
-        .format("parquet")
-        .load(input_dir)
-        .withWatermark("warc_ts", late_threshold)
-    )
+    stream = _webdocs_stream(spark, input_dir, watermark=late_threshold)
     agg = stream.groupBy(
         F.window("warc_ts", window).alias("w"), "lang"
     ).agg(F.count(F.lit(1)).alias("n_docs"))
@@ -554,21 +516,10 @@ def stream_bgp_view(
     semantics even for patterns whose projection does not determine the
     contributing edge uniquely (variable predicates). Per batch the work
     is Δ-proportional: two keyed joins whose left/right side is the
-    batch delta, never a recompute over history.
-
-    State layout + exactly-once discipline are shared with the other
-    incremental streams (uuid checkpoint lineage, versioned overwrite
-    writes ``bgp_edges_v<id>`` / ``view_v<id>``, atomic ``_LATEST`` flip
-    last, replayed batch ids skipped). Scale path: the cumulative edge
-    set is the day-partitioned edge table itself (MERGE INTO touching
-    the batch's days) and the view merge is a MERGE INTO keyed on the
-    variable columns — per-batch IO proportional to the delta.
+    batch delta, never a recompute over history. State versions are
+    ``bgp_edges_v<id>`` (cumulative distinct edges) and ``view_v<id>``.
     """
-    import os
-
     from kgforge.graph.bgp import _check_patterns, _compile_pattern, _is_var
-    from kgforge.stages.canonicalize import rewrite_triples
-    from kgforge.stages.docstream import extract_docstream
 
     if len(patterns) != 2:
         raise ValueError(
@@ -600,16 +551,6 @@ def stream_bgp_view(
             "query if that is really what you want"
         )
 
-    mention_map = spark.read.parquet(alias_map_path).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
-    reader = spark.readStream.schema(WEBDOCS_DDL).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir).withWatermark("warc_ts", "1 day")
-    os.makedirs(state_dir, exist_ok=True)
-    ckpt_identity = _checkpoint_identity(checkpoint_dir)
-
     def _match_pair(left_edges, right_edges):
         """P1(left) ⋈ P2(right) on the shared variables — both sides are
         distinct single-pattern projections, so the join is a set."""
@@ -617,21 +558,8 @@ def stream_bgp_view(
         r, _ = _compile_pattern(right_edges, patterns[1], 1)
         return l.join(r, on=shared, how="inner")
 
-    def process_batch(batch_df, batch_id: int):
-        sess = batch_df.sparkSession
-        marker = os.path.join(state_dir, "_LATEST")
-        last_applied = _marker_last_applied(
-            marker, checkpoint_dir, ckpt_identity, state_dir
-        )
-        if batch_id <= last_applied:
-            return
-        batch_edges = (
-            rewrite_triples(
-                extract_docstream(batch_df, backend=backend), mention_map
-            )
-            .select("subj_id", "pred", "obj_id")
-            .distinct()
-        )
+    def step(sess, edges):
+        batch_edges = edges.select("subj_id", "pred", "obj_id").distinct()
         cur_edges, new_edges, all_edges = _advance_distinct_edges(
             sess, state_dir, "bgp_edges_v", batch_edges,
             ["subj_id", "pred", "obj_id"],
@@ -639,6 +567,7 @@ def stream_bgp_view(
         delta = _match_pair(new_edges, all_edges)
         if cur_edges is not None:
             delta = delta.unionByName(_match_pair(cur_edges, new_edges))
+        view = delta.dropDuplicates()
         cur_view = read_bgp_view_state(sess, state_dir)
         if cur_view is not None:
             # NULL-SAFE anti-join (round-5 ADVICE): a binding carrying a
@@ -647,26 +576,15 @@ def stream_bgp_view(
             # the standing view and be appended again every batch,
             # breaking set semantics vs match_bgp — eqNullSafe treats
             # NULL = NULL as a match, like the dropDuplicates beside it.
-            d = delta.dropDuplicates()
             cond = None
             for c in cur_view.columns:
-                e = d[c].eqNullSafe(cur_view[c])
+                e = view[c].eqNullSafe(cur_view[c])
                 cond = e if cond is None else (cond & e)
-            fresh = d.join(cur_view, on=cond, how="left_anti")
-            merged = cur_view.unionByName(fresh)
-        else:
-            merged = delta.dropDuplicates()
-        all_edges.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"bgp_edges_v{batch_id}")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"view_v{batch_id}")
-        )
-        _flip_marker(marker, ckpt_identity, batch_id)
+            fresh = view.join(cur_view, on=cond, how="left_anti")
+            view = cur_view.unionByName(fresh)
+        return {"bgp_edges_v": all_edges, "view_v": view}
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_versioned_state(
+        spark, input_dir, alias_map_path, state_dir, checkpoint_dir,
+        backend, max_files_per_trigger, step,
     )

@@ -2,7 +2,10 @@
 watermark-closed sessions that agree with the batch computation, keeps
 open sessions in state, and re-runs are no-ops without new data."""
 
+import functools
 import os
+
+import pytest
 
 from kgforge.streaming.stateful import stream_sessionize
 
@@ -230,3 +233,76 @@ def test_stream_bgp_view_guards(spark, tmp_path):
             spark, "x", "y", str(tmp_path / "s"), str(tmp_path / "c"),
             [("?a", "acquired", "?b"), ("?b", "?p", "?c")],
         )
+
+
+_BGP_PATTERNS = [("?a", "acquired", "?b"), ("?b", "works at", "?c")]
+
+
+@pytest.mark.parametrize("stream", ["edge_latest", "degree", "bgp_view"])
+def test_versioned_state_replays_crash_window_and_refuses_foreign_checkpoint(
+    spark, tmp_path, stream
+):
+    """The exactly-once protocol every state stream shares, end to end.
+
+    Crash window: the process died after batch n's state write but before
+    both the ``_LATEST`` flip and Spark's commit record. Simulated by
+    deleting ``commits/<n>`` (and its crc) and rewinding the marker to n-1.
+    The re-run must replay batch n over its already-written versions, flip
+    the marker to n and leave exactly the pre-crash state. A run from a
+    different checkpoint against the same state must refuse."""
+    import json
+
+    from kgforge.fixtures.gen import write_fixture_tables
+    from kgforge.stages.link import alias_resolution
+    from kgforge.streaming import ingest
+
+    start, read = {
+        "edge_latest": (
+            ingest.stream_upsert_edge_latest, ingest.read_edge_latest_state
+        ),
+        "degree": (ingest.stream_degree_over_time, ingest.read_degree_state),
+        "bgp_view": (
+            functools.partial(ingest.stream_bgp_view, patterns=_BGP_PATTERNS),
+            ingest.read_bgp_view_state,
+        ),
+    }[stream]
+    webdocs_path, alias_path = write_fixture_tables(
+        spark, str(tmp_path / "fx"), 40, partitions=3
+    )
+    amap_path = str(tmp_path / "alias_map")
+    alias_resolution(spark.read.parquet(alias_path)).write.parquet(amap_path)
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    def run(checkpoint):
+        start(
+            spark, webdocs_path, amap_path, state, checkpoint,
+            max_files_per_trigger=1,
+        ).awaitTermination(180)
+
+    def snapshot():
+        return sorted(str(r) for r in read(spark, state).collect())
+
+    marker = os.path.join(state, "_LATEST")
+
+    def marker_rec():
+        with open(marker) as f:
+            return json.load(f)
+
+    run(ckpt)
+    rec = marker_rec()
+    n = rec["batch_id"]
+    assert n >= 1  # several micro-batches, so n-1 is a real state version
+    before = snapshot()
+    assert before
+
+    os.remove(os.path.join(ckpt, "commits", str(n)))
+    os.remove(os.path.join(ckpt, "commits", f".{n}.crc"))
+    with open(marker, "w") as f:
+        json.dump({"checkpoint": rec["checkpoint"], "batch_id": n - 1}, f)
+    run(ckpt)
+    assert marker_rec() == rec
+    assert snapshot() == before
+
+    with pytest.raises(Exception, match="checkpoint"):
+        run(str(tmp_path / "foreign_ckpt"))
+        raise AssertionError("a foreign checkpoint lineage should refuse")

@@ -13,12 +13,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    from pyspark.sql import functions as F
-
     from kgforge.fixtures.gen import gen_alias_rows, gen_webdocs_rows
     from kgforge.queries import q_revenue_topk, q_scan_dropna
     from kgforge.session import get_spark
-    from kgforge.stages.canonicalize import rewrite_triples
+    from kgforge.stages.canonicalize import mention_map, rewrite_triples
     from kgforge.stages.docstream import extract_docstream
     from kgforge.stages.link import alias_resolution
 
@@ -31,9 +29,7 @@ def main() -> int:
         [(r["alias"], r["entity_id"], r["canon"], r["prior"]) for r in gen_alias_rows(50)],
         "alias string, entity_id string, canon string, prior double",
     )
-    mmap = alias_resolution(alias_df).select(
-        F.col("alias").alias("mention"), "canon_id"
-    )
+    mmap = mention_map(alias_resolution(alias_df))
 
     out = [
         '# PLANS — captured physical plans (live `.explain("formatted")` output)',
