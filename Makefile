@@ -1,6 +1,7 @@
 PY ?= python
+WORKLOAD ?= build
 
-.PHONY: test tier1 test-fast bench correctness scaling skew pipeline reference-baseline zip clean
+.PHONY: test tier1 test-fast bench kgbench correctness scaling skew pipeline reference-baseline zip clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -14,6 +15,10 @@ test-fast:
 
 bench:
 	$(PY) bench.py
+
+# one untraced benchmark run (BENCHMARK.json's command); WORKLOAD=build|query|ingest
+kgbench:
+	python3 kgbench/run.py --workload $(WORKLOAD) --seed 7 --seconds 6 --trace 0
 
 correctness:
 	$(PY) tools/check_correctness.py

@@ -45,6 +45,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from kgforge.fixtures.gen import write_fixture_tables
+    from kgforge.io import tables
     from kgforge.pipeline import run_pipeline
     from kgforge.session import get_spark
 
@@ -68,8 +69,10 @@ def main() -> int:
         backend=args.backend, resume=not args.no_resume,
         analytics=args.analytics,
     )
-    for name, df in results.items():
-        print(f"{name:12s} rows={df.count()}")
+    # the counts come from the stage manifests: no output table is re-read
+    manifests = [tables.read_manifest(os.path.join(out, name)) for name in results]
+    for m in manifests:
+        print(f"{m['stage']:16s} rows={m['row_count']} files={m.get('data_files', '?')}")
     if args.export_ntriples:
         from kgforge.io.ntriples import write_ntriples
 
@@ -78,8 +81,8 @@ def main() -> int:
         # no count-back: the line count equals the edges row count just
         # printed, and re-scanning the text would double the export I/O
         print(f"edges_nt     -> {nt_path}")
-    lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    print(f"lineage rows={lineage.count()} (per-partition checkpoints)")
+    lineage_rows = sum(len(m["lineage"]) for m in manifests)
+    print(f"lineage rows={lineage_rows} (per-partition checkpoints)")
     print(f"output: {out}")
     spark.stop()
     return 0

@@ -61,14 +61,9 @@ def materialize_edges_by_day(
 
     if is_committed(path, stage):
         return
-    # cluster rows by day BEFORE the partitioned write: without this every
-    # input task writes a file into every day directory (tasks × days small
-    # files — a metadata bomb at crawl scale); one shuffle on day bounds the
-    # file count to the day-task count (AQE coalesces small days). On a
-    # real deployment with giant days, add a second split key:
-    # repartition("day", pmod(xxhash64(subj_id), N)).
+    # write_parquet clusters rows by day: one file per day directory
     write_table(
-        edges_day_df.repartition("day"),
+        edges_day_df,
         path,
         stage=stage,
         partition_by=["day"],

@@ -11,6 +11,12 @@ work against completed lineage, SURVEY.md §4.3-4). When an Iceberg catalog
 is configured (``spark.sql.catalog.*`` with the runtime jar on a real
 cluster), ``use_iceberg=True`` routes through ``writeTo().partitionedBy``
 instead — same call sites, no engine changes.
+
+Every other Parquet write of stage data goes through ``write_parquet``,
+which clusters rows by the partition columns before ``partitionBy``: a
+day-partitioned table holds one file per ``day=`` directory, not one per
+input task and day. The manifest records the table's ``data_files`` so a
+regression to the tasks × days layout shows in every run.
 """
 
 from __future__ import annotations
@@ -87,6 +93,24 @@ def is_committed(path: str, stage: str | None = None) -> bool:
     return m.get("status") == "committed" and (stage is None or m.get("stage") == stage)
 
 
+def write_parquet(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    """Overwrite ``path`` with ``df`` as Parquet, partitioned by
+    ``partition_by`` when given."""
+    writer = df.write
+    if partition_by:
+        # cluster rows by the partition columns BEFORE the partitioned
+        # write: without this every input task writes a file into every
+        # partition directory (tasks × days small files — a metadata bomb
+        # at crawl scale); one shuffle bounds the file count to one per
+        # directory (AQE coalesces small days). On a real deployment with
+        # giant days, add a second split key:
+        # repartition("day", pmod(xxhash64(subj_id), N)).
+        writer = df.repartition(*partition_by).write.partitionBy(*partition_by)
+    writer.mode("overwrite").parquet(path)
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -103,10 +127,7 @@ def write_table(
         writer.createOrReplace()
         data_df = df.sparkSession.read.format("iceberg").load(path)
     else:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        write_parquet(df, path, partition_by)
         data_df = df.sparkSession.read.parquet(path)
     # one post-write scan: the table's count and checksum are the sums of
     # its per-partition ones (an empty table has no partitions: 0, "0")
@@ -118,6 +139,7 @@ def write_table(
         "row_count": sum(e["output_rows"] for e in lineage),
         "checksum": str(sum(int(e["checksum"]) for e in lineage)),
         "partition_by": partition_by or [],
+        "data_files": len(data_df.inputFiles()),
         "lineage": lineage if collect_lineage else [],
         "committed_at": time.time(),
     }
@@ -161,4 +183,5 @@ def write_lineage_table(spark: SparkSession, manifests: list[dict], path: str):
                     entry["ts"],
                 )
             )
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("overwrite").parquet(path)
+    # tens of rows: one file, not one per createDataFrame slice
+    write_parquet(spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1), path)

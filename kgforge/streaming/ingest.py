@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.io.tables import write_parquet
+
 WEBDOCS_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -59,10 +61,7 @@ def write_batch_idempotent(
     overwrite, so an at-least-once replay of the same batch cannot
     duplicate rows. Readers see ``batch_id`` as a discovered partition
     column of ``output_dir``."""
-    w = batch_df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(f"{output_dir}/batch_id={batch_id}")
+    write_parquet(batch_df, f"{output_dir}/batch_id={batch_id}", partition_by)
 
 
 def _webdocs_stream(
@@ -286,9 +285,7 @@ def _stream_versioned_state(
             return  # replay of an already-merged batch — exactly-once skip
         versions = step(batch_df.sparkSession, batch_edges(batch_df))
         for prefix, df in versions.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(state_dir, f"{prefix}{batch_id}")
-            )
+            write_parquet(df, os.path.join(state_dir, f"{prefix}{batch_id}"))
         _flip_marker(marker, ckpt_identity, batch_id)
 
     return _start_batches(stream, process_batch, checkpoint_dir)

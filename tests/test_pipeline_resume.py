@@ -2,6 +2,7 @@
 resume after partial failure (BASELINE.md "resume idempotency"), and skew
 robustness of the salted join (BASELINE.md "skew robustness")."""
 
+import glob
 import json
 import os
 import shutil
@@ -84,6 +85,25 @@ def test_resume_rebuilds_partial_uncommitted_write(spark, fixture_paths, tmp_pat
     run_pipeline(spark, webdocs_path, alias_path, out, resume=True)
     assert tables.is_committed(ent_dir, "entities")
     assert _table_sig(spark, ent_dir) == sig
+
+
+def test_day_partitioned_stages_write_one_file_per_day(
+    spark, fixture_paths, tmp_path
+):
+    """The pipeline's day-partitioned tables hold one file per ``day=``
+    directory (rows clustered by day before the write), and the manifest
+    records that file count."""
+    webdocs_path, alias_path = fixture_paths
+    out = str(tmp_path / "run4")
+    run_pipeline(spark, webdocs_path, alias_path, out, analytics=True)
+    for name in ["edges", "edges_canon_pred"]:
+        path = os.path.join(out, name)
+        day_dirs = [d for d in os.listdir(path) if d.startswith("day=")]
+        assert day_dirs, name
+        for d in day_dirs:
+            n = len(glob.glob(os.path.join(path, d, "*.parquet")))
+            assert n == 1, (name, d, n)
+        assert tables.read_manifest(path)["data_files"] == len(day_dirs)
 
 
 def test_hot_key_present_in_fixture(spark, fixture_paths):

@@ -111,6 +111,21 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert set(got.columns) == {"id", "v", "batch_id"}
 
 
+def test_batch_sink_writes_one_file_per_day(spark, tmp_path):
+    """A partitioned micro-batch is clustered by day before the write: a
+    multi-task batch writes one file per ``day=`` directory."""
+    from kgforge.streaming.ingest import write_batch_idempotent
+
+    df = spark.range(60).selectExpr("id", "id % 6 AS day").repartition(5)
+    out = str(tmp_path / "by_day")
+    write_batch_idempotent(df, out, 0, partition_by=["day"])
+    day_dirs = glob.glob(os.path.join(out, "batch_id=0", "day=*"))
+    assert len(day_dirs) == 6
+    for d in day_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert spark.read.parquet(out).count() == 60
+
+
 def test_windowed_counts(spark, tmp_path):
     fx = str(tmp_path / "fx2")
     webdocs_path, _ = write_fixture_tables(spark, fx, 80, partitions=2)

@@ -3,6 +3,7 @@ uncommitted; stage-name mismatch is not committed; commit is atomic
 (no .tmp left behind); the committed totals come from the one lineage
 scan and equal a whole-table checksum."""
 
+import glob
 import json
 import os
 
@@ -82,3 +83,22 @@ def test_write_table_scans_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tables, "table_checksum", rescan)
     m = tables.write_table(spark.range(5), str(tmp_path / "t"), "s")
     assert m["row_count"] == 5
+
+
+def test_partitioned_write_clusters_one_file_per_partition(spark, tmp_path):
+    """Rows are clustered by the partition columns before the partitioned
+    write: seven input tasks write one file per ``k=`` directory, not one
+    per task and directory."""
+    d = str(tmp_path / "t")
+    df = _seven_files(spark).selectExpr("*", "id % 5 as k")
+    m = tables.write_table(df, d, "s", partition_by=["k"])
+    k_dirs = [x for x in os.listdir(d) if x.startswith("k=")]
+    files = glob.glob(os.path.join(d, "k=*", "*.parquet"))
+    assert len(k_dirs) == 5
+    assert sorted(os.path.dirname(f) for f in files) == sorted(
+        os.path.join(d, x) for x in k_dirs
+    )
+    assert (m["row_count"], m["checksum"]) == tables.table_checksum(
+        spark.read.parquet(d)
+    )
+    assert m["data_files"] == len(files)
