@@ -24,8 +24,9 @@ Scale notes per operator:
   vertices from exploding the shuffle at web scale.
 - ``label_propagation``: synchronous min-of-(count desc, label) updates are
   deterministic (no async race like classic LPA); each iteration is one
-  join + two grouped aggregations, all keyed on ``node``/``nbr`` so AQE
-  reuses the exchange where possible.
+  broadcast join of the label table + one deterministic ``mode``
+  aggregation keyed on ``node`` — no exchange per round while the label
+  table fits the broadcast cap (one per round above it).
 """
 
 from __future__ import annotations
@@ -34,8 +35,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from kgforge.graph.cc import _signature as _cc_signature
 
 
 def _edge_roles(edges_day_df: DataFrame) -> DataFrame:
@@ -456,8 +455,6 @@ def label_propagation_labels(
     if iterations <= 0:
         return nbrs.select("node").distinct().withColumn("label", F.col("node"))
     labels = None
-    prev_sig = None
-    stop_next = False
     for it in range(iterations):
         if labels is None:
             # round 1 fused (round-6): every node starts as its own
@@ -488,10 +485,6 @@ def label_propagation_labels(
         labels = nbr_labels.groupBy("node").agg(
             F.mode("nbr_label", True).alias("label")
         )
-        if stop_next:
-            # parity escape (see below): one extra round re-aligned the
-            # period-≤2 trajectory with the final round's parity
-            break
         # truncate lineage every OTHER round — but only for LONG loops
         # (iterations > 5): per-round eager checkpoints pay one Spark job
         # each, and with the light round-6 round shape (broadcast join +
@@ -500,32 +493,11 @@ def label_propagation_labels(
         # (flip-flop A/B min 3.12 → 2.47 s) — the optimizer handles a
         # 5-join plan fine, and the nested per-round broadcast stages
         # already execute each round exactly once. Long loops keep the
-        # cadence: lineage growth is real there, and the signature
-        # early-exit below reads the checkpointed rounds. The LAST round
-        # always stays lazy: its labels are consumed exactly once by the
+        # cadence: lineage growth is real there. The LAST round always
+        # stays lazy: its labels are consumed exactly once by the
         # caller's aggregation.
         if iterations > 5 and it % 2 == 1 and it != iterations - 1:
             labels = labels.localCheckpoint()
-            # early exit, semantics-preserving up to checksum collision: a
-            # signature match between checkpointed rounds proves the
-            # trajectory has period ≤ 2 (fixpoint or bipartite-star
-            # oscillation); the final state equals the CURRENT state iff
-            # the remaining round count is EVEN — on odd remainder, run
-            # exactly ONE more round (period ≤ 2 ⇒ parity re-aligns) and
-            # stop. Signatures are only computed when a break could save a
-            # round (iterations > 5 — at the default 5, the earliest
-            # actionable match saves nothing, so production calls pay zero
-            # extra jobs). The checksum is probabilistic (_signature
-            # docstring); a collision would end the loop early with a
-            # period-assumption that doesn't hold — the standard accepted
-            # risk of checksum fixpoint detection, shared with graph.cc.
-            if iterations > 5 and it != iterations - 1:
-                sig = _cc_signature(labels, "node", "label")
-                if sig == prev_sig:
-                    if (iterations - (it + 1)) % 2 == 0:
-                        break
-                    stop_next = True
-                prev_sig = sig
     return labels
 
 

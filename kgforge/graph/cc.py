@@ -13,7 +13,8 @@ stable (count + order-insensitive checksum).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -66,34 +67,31 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _signature(
-    e: DataFrame, col_a: str = "src", col_b: str = "dst"
-) -> tuple[int, int]:
-    """Order-insensitive hashed checksum of a two-column DataFrame (count +
-    sum of xxhash64 over both columns). Shared by the cc fixpoint and the
-    LPA convergence exit (graph.analytics). PROBABILISTIC: distinct states
-    can collide (order-insensitive sums admit swap collisions), the same
-    accepted risk as any checksum-based fixpoint detection.
+def _signature(e: DataFrame) -> tuple[int, int]:
+    """Order-insensitive hashed checksum of an edge set (count + sum of
+    xxhash64 over src, dst). PROBABILISTIC: distinct states can collide
+    (order-insensitive sums admit swap collisions), the same accepted risk
+    as any checksum-based fixpoint detection.
 
     decimal(38,0) sum: overflow-proof under ANSI mode (Spark 4 default)."""
     row = e.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(F.xxhash64(F.col(col_a), F.col(col_b)).cast("decimal(38,0)")),
+            F.sum(F.xxhash64(F.col("src"), F.col("dst")).cast("decimal(38,0)")),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("h"),
     ).collect()[0]
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect the edge list and run union-find on
-    the driver. Entity-dedup sameAs graphs are bounded by the alias
+def _driver_union_find(spark: SparkSession, edges: pa.Table) -> DataFrame:
+    """Small-graph fast path: union-find on the driver over the collected
+    edge table (src, dst). Entity-dedup sameAs graphs are bounded by the alias
     dictionary — orders of magnitude smaller than the document stream — so
-    below the threshold this replaces ~2·log(n) serial Spark jobs with one
-    collect, removing constant latency that would otherwise cap scaling
-    efficiency. The distributed star algorithm remains the path for graphs
-    that don't fit on the driver."""
+    below the threshold this replaces ~2·log(n) serial Spark jobs with the
+    one bounded collect, removing constant latency that would otherwise
+    cap scaling efficiency. The distributed star algorithm remains the
+    path for graphs that don't fit on the driver."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -103,14 +101,14 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for row in e.collect():
-        ra, rb = find(row["src"]), find(row["dst"])
+    for a, b in zip(edges["src"].to_pylist(), edges["dst"].to_pylist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(n, find(n)) for n in list(parent)]
-    return e.sparkSession.createDataFrame(rows, "node string, component string")
+    labels = [(n, find(n)) for n in list(parent)]
+    return spark.createDataFrame(labels, "node string, component string")
 
 
 def connected_components(
@@ -120,7 +118,8 @@ def connected_components(
     lexicographic min node id of each connected component. Isolated nodes
     (absent from edges) are the caller's concern — a node not returned maps
     to itself. Graphs with ≤ ``driver_threshold`` edges use the driver
-    union-find fast path; larger graphs run alternating star rounds."""
+    union-find fast path (one bounded collect decides the path and feeds
+    it); larger graphs run alternating star rounds."""
     e = (
         edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -128,12 +127,12 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    n_edges = e.count()
-    if n_edges == 0:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, component string")
-    if n_edges <= driver_threshold:
-        return _driver_union_find(e)
+    # Arrow, not Row objects: above the threshold this collect is thrown
+    # away, and as Arrow it costs little more than the count it replaces
+    head = e.limit(driver_threshold + 1).toArrow()
+    if head.num_rows <= driver_threshold:
+        return _driver_union_find(edges.sparkSession, head)
+    del head  # the star rounds run on the executors, not the driver
     prev_sig = None
     converged = False
     for _ in range(max_iter):

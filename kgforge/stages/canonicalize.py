@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.stages.link import self_entity
+
 EDGES_SCHEMA = (
     "subj_id string, pred string, obj_id string, url string, warc_ts timestamp"
 )
@@ -45,15 +47,9 @@ def rewrite_triples(triples_df: DataFrame, mention_map: DataFrame) -> DataFrame:
         triples_df.join(F.broadcast(subj_map), "subj", "left")
         .join(F.broadcast(obj_map), "obj", "left")
         .select(
-            F.coalesce(
-                F.col("subj_id"),
-                F.concat(F.lit("M#"), F.substring(F.md5(F.col("subj")), 1, 12)),
-            ).alias("subj_id"),
+            F.coalesce(F.col("subj_id"), self_entity("subj")).alias("subj_id"),
             "pred",
-            F.coalesce(
-                F.col("obj_id"),
-                F.concat(F.lit("M#"), F.substring(F.md5(F.col("obj")), 1, 12)),
-            ).alias("obj_id"),
+            F.coalesce(F.col("obj_id"), self_entity("obj")).alias("obj_id"),
             "url",
             "warc_ts",
         )

@@ -1,24 +1,22 @@
 """Stage C — entity linking (SURVEY.md §2.11).
 
-Relational formulation of the reference-free linking design:
+Relational formulation of the reference-free linking design. A mention
+only matches an identical alias, so scoring happens once per alias:
 
-1. distinct mentions from ``triples_raw`` (one shuffle, tiny output);
-2. **broadcast hash join** mentions ⋈ alias_dict on the exact alias
-   string (J6 — the dictionary is small by construction, ~3 aliases per
-   entity, so broadcast keeps the big side shuffle-free);
-3. candidate scoring with a **vectorized pandas UDF**:
-   ``score = prior * cosine(embed(mention), embed(canon))`` — Arrow
-   batches, no per-row Python (north-rule requirement);
-4. top-1 per mention via ``row_number()`` over a deterministic window
-   (score desc, entity_id asc tie-break);
-5. unmatched mentions become self-entities ``M#<hash>`` so downstream
-   canonicalization sees a total mapping.
+1. ``best_entity``: every alias row scored by a **vectorized pandas UDF**
+   ``score = prior * cosine(embed(alias), embed(canon))`` (Arrow batches,
+   no per-row Python), top-1 per alias via ``row_number()`` over a
+   deterministic window (score desc, entity_id asc tie-break);
+2. ``link``: distinct mentions ⋈ **broadcast** ``best_entity`` on the exact
+   alias string (J6 — the dictionary is small by construction);
+3. unmatched mentions become self-entities ``M#<hash>`` (``self_entity``)
+   so downstream canonicalization sees a total mapping.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
@@ -52,60 +50,57 @@ def mentions(triples_df: DataFrame) -> DataFrame:
     )
 
 
-def link(mentions_df: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """mentions → entities(mention, entity_id, canon, score): best candidate
-    per mention; unmatched mentions map to deterministic self-entities."""
-    cand = mentions_df.join(
-        F.broadcast(alias_df),
-        mentions_df["mention"] == alias_df["alias"],
-        "left",
-    )
-    scored = cand.withColumn(
-        "score",
-        F.when(
-            F.col("entity_id").isNotNull(),
-            _pair_score(F.col("mention"), F.col("canon"), F.col("prior")),
-        ).otherwise(F.lit(0.0)),
-    )
-    w = Window.partitionBy("mention").orderBy(
-        F.desc("score"), F.asc_nulls_last("entity_id")
-    )
-    best = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn", "alias", "prior")
-    )
-    return best.select(
-        "mention",
-        F.coalesce(
-            F.col("entity_id"),
-            F.concat(F.lit("M#"), F.substring(F.md5(F.col("mention")), 1, 12)),
-        ).alias("entity_id"),
-        F.coalesce(F.col("canon"), F.col("mention")).alias("canon"),
-        F.col("score"),
-    )
+def self_entity(mention: str | Column) -> Column:
+    """Deterministic self-entity id ``M#`` + md5(mention)[:12] for a mention
+    no alias matches."""
+    return F.concat(F.lit("M#"), F.substring(F.md5(mention), 1, 12))
 
 
-def alias_resolution(alias_df: DataFrame) -> DataFrame:
-    """Reference-data prep (dictionary-only, document-independent): resolve
-    every alias to its best entity (same scoring as ``link``) and then to
-    its canonical component id via sameAs connected components. Runs once
-    per dictionary version — the per-batch document stream then needs only
-    broadcast joins against this map, so no per-batch linking jobs gate
-    throughput. Output: alias_map(alias, canon_id, score)."""
-    from kgforge.graph.cc import connected_components
-
+def best_entity(alias_df: DataFrame) -> DataFrame:
+    """alias_dict → (alias, entity_id, canon, score): the best-scoring
+    entity per alias, ties to the smallest entity_id. The only per-alias
+    scorer — ``link`` and ``alias_resolution`` both read it."""
     scored = alias_df.withColumn(
         "score", _pair_score(F.col("alias"), F.col("canon"), F.col("prior"))
     )
     w = Window.partitionBy("alias").orderBy(
         F.desc("score"), F.asc_nulls_last("entity_id")
     )
-    best = (
+    return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("alias", "entity_id", "score")
+        .select("alias", "entity_id", "canon", "score")
     )
+
+
+def link(mentions_df: DataFrame, alias_df: DataFrame) -> DataFrame:
+    """mentions → entities(mention, entity_id, canon, score): one row per
+    distinct mention, its alias's best entity; unmatched mentions map to
+    deterministic self-entities."""
+    best = best_entity(alias_df)
+    joined = (
+        mentions_df.select("mention")
+        .distinct()
+        .join(F.broadcast(best), F.col("mention") == best["alias"], "left")
+    )
+    return joined.select(
+        "mention",
+        F.coalesce(F.col("entity_id"), self_entity("mention")).alias("entity_id"),
+        F.coalesce(F.col("canon"), F.col("mention")).alias("canon"),
+        F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
+    )
+
+
+def alias_resolution(alias_df: DataFrame) -> DataFrame:
+    """Reference-data prep (dictionary-only, document-independent): resolve
+    every alias to its best entity (``best_entity``, as ``link`` does) and
+    then to its canonical component id via sameAs connected components.
+    Runs once per dictionary version — the per-batch document stream then
+    needs only broadcast joins against this map, so no per-batch linking
+    jobs gate throughput. Output: alias_map(alias, canon_id, score)."""
+    from kgforge.graph.cc import connected_components
+
+    best = best_entity(alias_df)
     labels = connected_components(same_as_edges(alias_df))
     return (
         best.join(F.broadcast(labels), best["entity_id"] == labels["node"], "left")
@@ -129,10 +124,7 @@ def link_with_map(mentions_df: DataFrame, alias_map: DataFrame) -> DataFrame:
     )
     return joined.select(
         "mention",
-        F.coalesce(
-            F.col("canon_id"),
-            F.concat(F.lit("M#"), F.substring(F.md5(F.col("mention")), 1, 12)),
-        ).alias("canon_id"),
+        F.coalesce(F.col("canon_id"), self_entity("mention")).alias("canon_id"),
         F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
     )
 

@@ -8,7 +8,13 @@ import pytest
 from kgforge.fixtures.gen import gen_alias_rows
 from kgforge.graph.cc import connected_components
 from kgforge.linking.embed import cosine, embed
-from kgforge.stages.link import link, mentions, same_as_edges
+from kgforge.stages.link import (
+    alias_resolution,
+    link,
+    link_with_map,
+    mentions,
+    same_as_edges,
+)
 
 N_DOCS = 300
 
@@ -144,3 +150,72 @@ def test_cc_random_graph_matches_union_find(spark, threshold):
 def test_cc_empty(spark):
     e = spark.createDataFrame([], "src string, dst string")
     assert connected_components(e).collect() == []
+
+
+def test_cc_small_path_never_counts(spark, monkeypatch):
+    """The driver path is decided by one bounded collect: no count() job."""
+    e = spark.createDataFrame([("b", "a"), ("c", "b")], "src string, dst string")
+
+    def no_count(self):
+        raise AssertionError("connected_components counted the edge set")
+
+    # PySpark 4's classic DataFrame is a subclass: patch the concrete class
+    monkeypatch.setattr(type(e), "count", no_count)
+    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
+    assert got == {"a": "a", "b": "a", "c": "a"}
+
+
+@pytest.mark.parametrize("threshold,driver", [(4, True), (3, False)])
+def test_cc_threshold_boundary(spark, monkeypatch, threshold, driver):
+    """4 distinct non-loop edges (plus a duplicate and a self-loop, both
+    dropped before the path decision): threshold 4 takes the driver path,
+    3 the star rounds; both equal the union-find oracle."""
+    import kgforge.graph.cc as cc
+
+    pairs = [("a", "b"), ("b", "c"), ("d", "e"), ("e", "f"), ("a", "b"), ("c", "c")]
+    calls = []
+    orig = cc._driver_union_find
+
+    def spy(*args):
+        calls.append(1)
+        return orig(*args)
+
+    monkeypatch.setattr(cc, "_driver_union_find", spy)
+    e = spark.createDataFrame(pairs, "src string, dst string")
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(e, driver_threshold=threshold).collect()
+    }
+    assert got == _oracle_components(pairs)
+    assert bool(calls) == driver
+
+
+def test_link_is_best_entity_through_cc(spark, alias_df):
+    """``link`` gives each distinct mention its alias's best entity; that
+    entity pushed through the sameAs components is ``alias_resolution``'s
+    canon_id, with the same score (what ``link_with_map`` relies on)."""
+    aliases = sorted(r["alias"] for r in alias_df.select("alias").distinct().collect())
+    unseen = "never seen mention xyz"
+    m = spark.createDataFrame(
+        [(a,) for a in aliases] + [(aliases[0],), (unseen,)], "mention string"
+    )
+    linked = link(m, alias_df).collect()
+    assert len(linked) == len(aliases) + 1  # one row per distinct mention
+    by_mention = {r["mention"]: r for r in linked}
+    comp = {
+        r["node"]: r["component"]
+        for r in connected_components(same_as_edges(alias_df)).collect()
+    }
+    amap = {r["alias"]: r for r in alias_resolution(alias_df).collect()}
+    for a in aliases:
+        r = by_mention[a]
+        assert comp.get(r["entity_id"], r["entity_id"]) == amap[a]["canon_id"], a
+        assert r["score"] == amap[a]["score"], a
+    via_map = {
+        r["mention"]: r
+        for r in link_with_map(m.distinct(), alias_resolution(alias_df)).collect()
+    }
+    assert set(via_map) == set(by_mention)
+    for mention, r in by_mention.items():
+        assert via_map[mention]["canon_id"] == comp.get(r["entity_id"], r["entity_id"])
+        assert via_map[mention]["score"] == r["score"]
