@@ -242,15 +242,10 @@ def _kg_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics beside PageRank: total-degree histogram of the
     canonical entity graph (distinct edges; degree = in + out). Top-30
     degree values by node count. Oracle: expected parquet twin."""
-    e = _kg_day_edges(spark, sf_dir).select(
-        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    ).distinct()
-    deg = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    from kgforge.graph.analytics import endpoint_degree
+
+    e = _kg_day_edges(spark, sf_dir).select("subj_id", "obj_id").distinct()
+    deg = endpoint_degree(e, "subj_id", "obj_id")
     return (
         deg.groupBy("degree")
         .agg(F.count(F.lit(1)).alias("n_nodes"))

@@ -9,6 +9,13 @@ follows the same driver-side fixpoint pattern as kgforge.graph.cc and
 kgforge.graph.pagerank (synchronous updates + ``localCheckpoint`` lineage
 truncation).
 
+Three derived relations are each written once, here, and every graph
+operator (these, kgforge.graph.cc / pagerank / temporal, the streaming
+degree table and the contract entry) builds on them: ``directed_pairs``
+(distinct directed src != dst pairs), ``both_ways`` (every row in both
+orientations) and ``endpoint_degree`` (per-node endpoint count, a
+self-loop counted twice); ``_undirected`` is the undirected edge set.
+
 Scale notes per operator:
 - ``entity_profile``: one union + one grouped aggregation — a single
   shuffle on ``node`` with map-side partial aggregation; no joins.
@@ -147,11 +154,7 @@ def daily_active_nodes_approx(
 def two_hop_reach(edges_df: DataFrame, k: int = 20) -> DataFrame:
     """Distinct nodes reachable in 1 or 2 directed hops (seed excluded),
     per seed; top-k by (reach desc, node). Columns: node, reach."""
-    e = (
-        edges_df.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = directed_pairs(edges_df)
     a, b = e.alias("a"), e.alias("b")
     hop2 = (
         a.join(b, F.col("a.dst") == F.col("b.src"))
@@ -203,12 +206,7 @@ def two_hop_reach_approx(
     # scan+distinct pipelines in the before-plan) — materialize it once,
     # exactly the triangle_counts `oriented` discipline. Size is |E|, the
     # same bounded footprint the hop join itself moves.
-    e = (
-        edges_df.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = directed_pairs(edges_df).localCheckpoint()
     # ONE tagged aggregation builds the out-neighbor sketches AND the
     # in-degrees together (round-6): each edge contributes a (src, dst)
     # row — sketched, null-ignored by the degree sum — and a (dst, NULL)
@@ -302,6 +300,48 @@ def _undirected(edges_df: DataFrame) -> DataFrame:
     )
 
 
+def directed_pairs(
+    df: DataFrame, src: str = "subj_id", dst: str = "obj_id"
+) -> DataFrame:
+    """Distinct directed edge set as (src, dst) with src != dst. The
+    comparison is NULL for a NULL endpoint, so it drops those rows too:
+    Catalyst infers the ``isnotnull`` filters from it."""
+    return (
+        df.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def both_ways(
+    df: DataFrame, a: str, b: str, out: tuple[str, str] = ("node", "nbr")
+) -> DataFrame:
+    """Every (a, b) row in both orientations, as ``out`` columns; no dedup.
+    One in-row explode, not a unionAll of two selects: the union form
+    embeds (and so computes) its input twice, the explode scans it once
+    for the same multiset."""
+    x, y = out
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(x), F.col(b).alias(y)),
+                F.struct(F.col(b).alias(x), F.col(a).alias(y)),
+            )
+        ).alias("p")
+    ).select(f"p.{x}", f"p.{y}")
+
+
+def endpoint_degree(df: DataFrame, a: str, b: str, *keys: str) -> DataFrame:
+    """(keys…, node, degree): how many rows of ``df`` have node as the
+    ``a`` or the ``b`` endpoint, per ``keys``. A self-loop counts twice.
+    One in-row explode of the two endpoints, so ``df`` is computed once."""
+    return (
+        df.select(*keys, F.explode(F.array(a, b)).alias("node"))
+        .groupBy(*keys, "node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
 def triangle_counts(edges_df: DataFrame, k: int = 20) -> DataFrame:
     """Per-node triangle participation counts on the undirected distinct
     graph, top-k by (n_triangles desc, node). Columns: node, n_triangles.
@@ -323,13 +363,8 @@ def triangle_counts(edges_df: DataFrame, k: int = 20) -> DataFrame:
     # `oriented` (below), which gates three DOWNSTREAM branches after a
     # multi-join pipeline, is materialized.
     und = _undirected(edges_df)
-    # degree via in-row explode of (u, v) rather than a unionAll of two
-    # selects over ``und`` (round-6): the union form embeds the distinct
-    # pipeline twice; explode executes it once for the same multiset.
     deg = (
-        und.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
+        endpoint_degree(und, "u", "v")
         .withColumn(
             "okey", F.concat(F.lpad(F.col("degree"), 12, "0"), F.lit("|"), F.col("node"))
         )
@@ -393,28 +428,12 @@ def label_propagation_labels(
     # localCheckpoint preserves the partitioning, so the per-round plans
     # reuse it instead of re-shuffling the big side every round. Built in
     # ONE exchange (round-6): mirror the raw directed pairs both ways
-    # FIRST (in-row explode — one edge scan, not a unionAll of two), pick
-    # the partition key, and dedup with dropDuplicates — hash partitioning
-    # on EITHER single column already clusters every (node, nbr)
-    # duplicate, so the dedup aggregate runs in place instead of adding a
-    # second (distinct-then-repartition) shuffle.
-    sym = (
-        edges_df.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("subj_id").alias("node"),
-                        F.col("obj_id").alias("nbr"),
-                    ),
-                    F.struct(
-                        F.col("obj_id").alias("node"),
-                        F.col("subj_id").alias("nbr"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.node", "p.nbr")
-        .where(F.col("node") != F.col("nbr"))
+    # FIRST, pick the partition key, and dedup with dropDuplicates — hash
+    # partitioning on EITHER single column already clusters every
+    # (node, nbr) duplicate, so the dedup aggregate runs in place instead
+    # of adding a second (distinct-then-repartition) shuffle.
+    sym = both_ways(edges_df, "subj_id", "obj_id").where(
+        F.col("node") != F.col("nbr")
     )
     # Layout choice (round-6, guide §2/§3): the per-round label table is
     # one row per NODE — when it is small enough to broadcast, the round
@@ -535,15 +554,9 @@ def kcore(
     prev = e.count()
     cap = max_iter if max_iter is not None else prev + 2
     for _ in range(cap):
-        # in-row explode, not a 2-select union: one pass over the
-        # checkpointed edge set per peel round (round-6, the
-        # triangle_counts lesson)
-        deg = (
-            e.select(F.explode(F.array("u", "v")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
+        keep = (
+            endpoint_degree(e, "u", "v").where(F.col("degree") >= k).select("node")
         )
-        keep = deg.where(F.col("degree") >= k).select("node")
         e = (
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
@@ -556,12 +569,7 @@ def kcore(
         prev = n
     else:
         raise RuntimeError(f"kcore did not converge in {cap} peel rounds")
-    core_deg = (
-        e.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return core_deg.orderBy(F.desc("degree"), F.asc("node")).limit(top)
+    return endpoint_degree(e, "u", "v").orderBy(F.desc("degree"), F.asc("node")).limit(top)
 
 
 # candidate-generation cap for sameAs mining: a mid node of degree d fans
@@ -590,11 +598,7 @@ def sameas_candidates(
     shared mids of the candidate pairs, sizes broadcast back. Jaccard is
     rounded to 6 decimals for a stable typed compare."""
     und = _undirected(edges_df)
-    nbrs = (
-        und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(und.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .localCheckpoint()
-    )
+    nbrs = both_ways(und, "u", "v").localCheckpoint()
     sizes = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("sz"))
     mid_deg = nbrs.groupBy("nbr").agg(F.count(F.lit(1)).alias("mid_deg"))
     capped = nbrs.join(

@@ -17,25 +17,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.graph.analytics import both_ways, directed_pairs
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each node u: m = min(N(u) ∪ {u}); connect every strictly larger
     neighbor to m."""
-    # both orientations via one in-row explode, not a union of two
-    # selects — one pass over the (checkpointed) edge set per round
-    # (round-6, the triangle_counts lesson)
-    sym = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    sym = both_ways(e, "src", "dst", out=("src", "dst")).distinct()
     m = sym.groupBy("src").agg(F.min("dst").alias("minn"))
     m = m.select("src", F.least("minn", F.col("src")).alias("m"))
     return (
@@ -120,13 +108,7 @@ def connected_components(
     to itself. Graphs with ≤ ``driver_threshold`` edges use the driver
     union-find fast path (one bounded collect decides the path and feeds
     it); larger graphs run alternating star rounds."""
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = directed_pairs(edges, "src", "dst").localCheckpoint()
     # Arrow, not Row objects: above the threshold this collect is thrown
     # away, and as Arrow it costs little more than the count it replaces
     head = e.limit(driver_threshold + 1).toArrow()

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.graph.analytics import endpoint_degree
+
 
 def pagerank(
     edges: DataFrame,
@@ -27,12 +29,8 @@ def pagerank(
         .distinct()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    # the aggregate's unused degree column is pruned: a distinct node set
+    nodes = endpoint_degree(e, "src", "dst").select("node").localCheckpoint()
     n = nodes.count()
     if n == 0:
         return edges.sparkSession.createDataFrame([], "node string, rank double")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.graph.analytics import endpoint_degree
+
 # contract-query window: 15 of the fixture's 90 crawl days (FIXTURES.md)
 WINDOW_LO = "2025-01-10"
 WINDOW_HI = "2025-01-24"
@@ -40,15 +42,8 @@ def degree_over_time(edges_day_df: DataFrame, k: int = 30) -> DataFrame:
     within a day does not inflate degree (mirrors the static degree
     histogram's distinct-edge semantics); self-loops count both endpoints.
     """
-    e = edges_day_df.select(
-        "day", F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
-    ).distinct()
-    deg = (
-        e.select("day", F.col("src").alias("node"))
-        .unionAll(e.select("day", F.col("dst").alias("node")))
-        .groupBy("day", "node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    e = edges_day_df.select("day", "subj_id", "obj_id").distinct()
+    deg = endpoint_degree(e, "subj_id", "obj_id", "day")
     return deg.orderBy(F.desc("degree"), F.asc("day"), F.asc("node")).limit(k)
 
 
@@ -62,13 +57,7 @@ def materialize_edges_by_day(
     if is_committed(path, stage):
         return
     # write_parquet clusters rows by day: one file per day directory
-    write_table(
-        edges_day_df,
-        path,
-        stage=stage,
-        partition_by=["day"],
-        collect_lineage=False,
-    )
+    write_table(edges_day_df, path, stage=stage, partition_by=["day"])
 
 
 def window_edge_diff_topk(

@@ -117,7 +117,6 @@ def write_table(
     stage: str,
     partition_by: list[str] | None = None,
     use_iceberg: bool = False,
-    collect_lineage: bool = True,
 ) -> dict:
     """Write + commit a stage output table; returns the manifest dict."""
     if use_iceberg:  # pragma: no cover - needs the Iceberg runtime jar
@@ -140,7 +139,7 @@ def write_table(
         "checksum": str(sum(int(e["checksum"]) for e in lineage)),
         "partition_by": partition_by or [],
         "data_files": len(data_df.inputFiles()),
-        "lineage": lineage if collect_lineage else [],
+        "lineage": lineage,
         "committed_at": time.time(),
     }
     commit_manifest(path, manifest)

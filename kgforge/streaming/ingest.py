@@ -412,8 +412,9 @@ def stream_degree_over_time(
     re-count — so the state carries two tables per version: ``edges_v<id>``
     (the cumulative distinct edge set) and ``degree_v<id>``. A batch's
     NEW edges = batch-distinct edges anti-joined against the standing set;
-    only their endpoint contributions merge into the degree table (full
-    outer sum)."""
+    only their ``endpoint_degree`` (the batch query's own rule) merges into
+    the degree table (full outer sum)."""
+    from kgforge.graph.analytics import endpoint_degree
     from kgforge.stages.canonicalize import edges_with_day
 
     def step(sess, edges):
@@ -423,12 +424,7 @@ def stream_degree_over_time(
         _cur, new_edges, all_edges = _advance_distinct_edges(
             sess, state_dir, "edges_v", batch_edges, ["day", "src", "dst"]
         )
-        deg = (
-            new_edges.select("day", F.col("src").alias("node"))
-            .unionAll(new_edges.select("day", F.col("dst").alias("node")))
-            .groupBy("day", "node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
+        deg = endpoint_degree(new_edges, "src", "dst", "day")
         cur_deg = read_degree_state(sess, state_dir)
         if cur_deg is not None:
             d = deg.select("day", "node", F.col("degree").alias("degree_b"))

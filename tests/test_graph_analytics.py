@@ -246,11 +246,10 @@ def test_pred_canon_broadcast_plan(spark):
 
 
 def test_lpa_early_exit_preserves_semantics(spark):
-    """The convergence early-exit must be invisible: for BOTH a converging
-    graph and a period-2 oscillator (bipartite star), the result at a
-    large iteration cap equals the direct synchronous simulation run for
-    exactly that many rounds (the parity condition is what makes the
-    oscillator case hold)."""
+    """Runs of more than 5 rounds, which checkpoint the labels every other
+    round, equal the direct synchronous simulation run for exactly that
+    many rounds: for BOTH a converging graph and a period-2 oscillator
+    (bipartite star), at an even and an odd round count."""
     def simulate(pairs, iterations):
         adj = {}
         for u, v in pairs:
@@ -271,11 +270,11 @@ def test_lpa_early_exit_preserves_semantics(spark):
         return sizes
 
     graphs = [
-        # clique + bridge: converges quickly → even caps take the direct
-        # break, odd caps take the one-extra-round parity escape
+        # clique + bridge: converges within a few rounds, so the later
+        # rounds, checkpointed or not, must leave the labels unchanged
         [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("d", "e")],
-        # star: period-2 oscillator → the parity machinery must return the
-        # exact phase the full run would
+        # star: period-2 oscillator → 9 and 10 rounds end in opposite
+        # phases, and each must match the simulation's phase
         [("hub", f"n{i}") for i in range(4)],
     ]
     for pairs in graphs:
@@ -286,6 +285,39 @@ def test_lpa_early_exit_preserves_semantics(spark):
                 for r in label_propagation(df, iterations=iterations, k=100).collect()
             }
             assert got == simulate(pairs, iterations), (pairs, iterations)
+
+
+def test_derived_relation_helpers_match_python_count(spark):
+    """directed_pairs, both_ways and endpoint_degree against a pure-Python
+    count, on a graph with a duplicate edge, both orientations of one
+    edge, a self-loop and NULL endpoints."""
+    from collections import Counter
+
+    from kgforge.graph.analytics import both_ways, directed_pairs, endpoint_degree
+
+    rows = [
+        ("d1", "a", "b"), ("d1", "a", "b"), ("d1", "b", "a"), ("d1", "c", "c"),
+        ("d1", "a", None), ("d2", None, "b"), ("d2", "b", "c"), ("d2", "c", "c"),
+    ]
+    df = spark.createDataFrame(rows, "day string, subj_id string, obj_id string")
+
+    got = [(r["src"], r["dst"]) for r in directed_pairs(df).collect()]
+    assert sorted(got) == [("a", "b"), ("b", "a"), ("b", "c")]
+
+    bw = both_ways(df, "subj_id", "obj_id").collect()
+    assert len(bw) == 2 * len(rows)
+    assert Counter((r["node"], r["nbr"]) for r in bw) == Counter(
+        [(s, o) for _, s, o in rows] + [(o, s) for _, s, o in rows]
+    )
+
+    want = Counter()
+    for d, s, o in rows:
+        want[(d, s)] += 1
+        want[(d, o)] += 1
+    deg = endpoint_degree(df, "subj_id", "obj_id", "day")
+    assert deg.columns == ["day", "node", "degree"]
+    assert {(r["day"], r["node"]): r["degree"] for r in deg.collect()} == want
+    assert want[("d1", "c")] == 2  # the self-loop counts twice
 
 
 def test_entity_profile_approx_tracks_exact(spark):

@@ -165,6 +165,22 @@ def test_cc_small_path_never_counts(spark, monkeypatch):
     assert got == {"a": "a", "b": "a", "c": "a"}
 
 
+@pytest.mark.parametrize("threshold", [200_000, 0])  # driver path + star path
+def test_cc_drops_null_endpoint_edges(spark, threshold):
+    """An edge with a NULL endpoint joins nothing: no NULL node comes back,
+    and the labels equal the union-find oracle over the other edges."""
+    pairs = [("b", "a"), ("c", "b"), (None, "c"), ("d", None), ("x", "y")]
+    e = spark.createDataFrame(pairs, "src string, dst string")
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(e, driver_threshold=threshold).collect()
+    }
+    assert None not in got
+    assert got == _oracle_components(
+        [(a, b) for a, b in pairs if a is not None and b is not None]
+    )
+
+
 @pytest.mark.parametrize("threshold,driver", [(4, True), (3, False)])
 def test_cc_threshold_boundary(spark, monkeypatch, threshold, driver):
     """4 distinct non-loop edges (plus a duplicate and a self-loop, both

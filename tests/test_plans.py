@@ -121,6 +121,20 @@ def test_entity_profile_is_single_shuffle_no_joins(spark, tmp_path):
         assert join not in plan, join
 
 
+def test_degree_over_time_computes_edge_set_once(spark, tmp_path):
+    """Both endpoints come from one pass over the distinct (day, src, dst)
+    set: no Union, one edge-table scan, and one exchange for the distinct
+    edge set beside the degree aggregation's own."""
+    from kgforge.graph.temporal import degree_over_time
+
+    path = str(tmp_path / "edges_pq")
+    _kg_edges(spark).write.parquet(path)
+    plan = _plan(degree_over_time(spark.read.parquet(path)))
+    assert "Union" not in plan
+    assert plan.count("FileScan") == 1
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
 def test_triangles_plan_has_no_cartesian(spark):
     from kgforge.graph.analytics import triangle_counts
 

@@ -55,25 +55,20 @@ def _null_bearing(spark):
     )
 
 
-@pytest.mark.parametrize("collect_lineage", [True, False])
 @pytest.mark.parametrize("make", [_seven_files, _empty, _null_bearing])
-def test_manifest_totals_equal_table_checksum(spark, tmp_path, make, collect_lineage):
+def test_manifest_totals_equal_table_checksum(spark, tmp_path, make):
     """The manifest's row count and checksum, summed from the per-partition
-    lineage, equal a whole-table scan's; collect_lineage only decides
-    whether the lineage rows are stored."""
+    lineage, equal a whole-table scan's."""
     d = str(tmp_path / "t")
-    m = tables.write_table(make(spark), d, "s", collect_lineage=collect_lineage)
+    m = tables.write_table(make(spark), d, "s")
     assert (m["row_count"], m["checksum"]) == tables.table_checksum(
         spark.read.parquet(d)
     )
     if make is _seven_files:
         assert m["row_count"] == 70
-        if collect_lineage:
-            assert len(m["lineage"]) > 1
+        assert len(m["lineage"]) > 1
     if make is _empty:
         assert (m["row_count"], m["checksum"]) == (0, "0")
-    if not collect_lineage:
-        assert m["lineage"] == []
 
 
 def test_write_table_scans_once(spark, tmp_path, monkeypatch):

@@ -114,7 +114,10 @@ def main() -> int:
     from kgforge.graph.analytics import (
         SAMEAS_MID_DEGREE_CAP,
         _undirected,
+        both_ways,
         daily_active_nodes_approx,
+        directed_pairs,
+        endpoint_degree,
         entity_profile_table_approx,
         label_propagation,
         sameas_candidates,
@@ -155,12 +158,7 @@ def main() -> int:
 
     # --- defense distributions (the quantity each mitigation bounds) ----
     und = _undirected(edges).localCheckpoint()
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = endpoint_degree(und, "u", "v")
     okey = F.concat(F.lpad(F.col("degree").cast("string"), 10, "0"), F.col("node"))
     keyed = (
         und.join(deg.withColumnRenamed("node", "u"), "u")
@@ -214,11 +212,7 @@ def main() -> int:
 
     # LPA static neighbor table: both directions, hash-partitioned on the
     # join key (node) — the exact pre-partitioning the implementation uses
-    nbrs = (
-        und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(und.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .repartition(args.cpus * 2, "node")
-    )
+    nbrs = both_ways(und, "u", "v").repartition(args.cpus * 2, "node")
     mx, md = partition_rows(nbrs)
     out["lpa_neighbor_partition_rows"] = {"max": mx, "median": md}
 
@@ -227,11 +221,7 @@ def main() -> int:
     # replicate the operator's own split and measure its residual skew
     from kgforge.graph.analytics import TWO_HOP_HOT_K, TWO_HOP_HOT_MIN_DEGREE
 
-    e_dir = (
-        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e_dir = directed_pairs(edges)
     hot_dsts = (
         e_dir.groupBy("dst")
         .agg(F.count(F.lit(1)).alias("ind"))
