@@ -1,7 +1,9 @@
 PY ?= python
 WORKLOAD ?= build
+SEED ?= 7
+PAIRS ?= 10
 
-.PHONY: test tier1 test-fast bench kgbench correctness scaling skew pipeline reference-baseline zip clean
+.PHONY: test tier1 test-fast bench kgbench kgbench-ab correctness scaling skew pipeline reference-baseline zip clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -19,6 +21,10 @@ bench:
 # one untraced benchmark run (BENCHMARK.json's command); WORKLOAD=build|query|ingest
 kgbench:
 	python3 kgbench/run.py --workload $(WORKLOAD) --seed 7 --seconds 6 --trace 0
+
+# interleaved A/B against another checkout: make kgbench-ab PARENT=<dir> [WORKLOAD= SEED= PAIRS=]
+kgbench-ab:
+	$(PY) tools/kgbench_ab.py $(PARENT) . --workload $(WORKLOAD) --seed $(SEED) --pairs $(PAIRS)
 
 correctness:
 	$(PY) tools/check_correctness.py

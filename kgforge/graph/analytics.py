@@ -334,9 +334,13 @@ def both_ways(
 def endpoint_degree(df: DataFrame, a: str, b: str, *keys: str) -> DataFrame:
     """(keys…, node, degree): how many rows of ``df`` have node as the
     ``a`` or the ``b`` endpoint, per ``keys``. A self-loop counts twice.
-    One in-row explode of the two endpoints, so ``df`` is computed once."""
+    A NULL endpoint is not a node, as in ``directed_pairs``,
+    ``_undirected`` and CC: it gets no row, and the row's other endpoint
+    still counts. One in-row explode of the two endpoints, so ``df`` is
+    computed once."""
     return (
         df.select(*keys, F.explode(F.array(a, b)).alias("node"))
+        .where(F.col("node").isNotNull())
         .groupBy(*keys, "node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )

@@ -25,12 +25,20 @@ columns; constant-filtered patterns are small and broadcast under AQE's
 threshold. A pattern with ALL THREE terms variable scans the whole edge
 table — legal, but the planner warns via ``require_anchor=True``
 (default) which insists at least one pattern carries a constant.
+
+Repeated calls: every public entry point resolves its edges frame once
+through ``graph.serving.serving_edges``. A call that repeats over the
+same committed table version reads that version's shared distinct
+snapshot from the second call on; a first sighting keeps the pushed-
+down scan described above.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgforge.graph.serving import serving_edges
 
 _COLS = ("subj_id", "pred", "obj_id")
 
@@ -139,6 +147,25 @@ def match_bgp(
     ...           filters=["x != y"])
     DataFrame[x: string, y: string]
     """
+    return _match_bgp(
+        serving_edges(edges),
+        patterns,
+        require_anchor=require_anchor,
+        allow_product=allow_product,
+        filters=filters,
+    )
+
+
+def _match_bgp(
+    edges: DataFrame,
+    patterns: list[tuple[str, str, str]],
+    *,
+    require_anchor: bool = True,
+    allow_product: bool = False,
+    filters: list[str] | None = None,
+) -> DataFrame:
+    """``match_bgp`` over an already resolved edges frame: the body every
+    entry point of this module shares after its one ``serving_edges``."""
     if not patterns:
         raise ValueError("empty BGP")
     _check_patterns(patterns, require_anchor, per_pattern_anchor=False)
@@ -227,7 +254,8 @@ def match_bgp_optional(
     _check_patterns(
         optional, kw.get("require_anchor", True), per_pattern_anchor=True
     )
-    out = match_bgp(edges, patterns, **kw)
+    edges = serving_edges(edges)
+    out = _match_bgp(edges, patterns, **kw)
     required_vars = set(out.columns)
     introduced: set[str] = set()
     for ix, pat in enumerate(optional):
@@ -277,11 +305,13 @@ def match_bgp_window(
     PartitionFilter — the scan is proportional to the window, not the
     table (plan-gated in tests/test_bgp.py). Semantics: the whole BGP is
     evaluated within one window (every pattern must hold there), the
-    windowed-serving counterpart of window_subgraph_topk."""
+    windowed-serving counterpart of window_subgraph_topk. The read is
+    built per call, so it skips the serving snapshot and keeps its
+    pruned scan."""
     edges = spark.read.parquet(edges_path).where(
         (F.col("day") >= lo) & (F.col("day") <= hi)
     )
-    return match_bgp(edges, patterns, **kw)
+    return _match_bgp(edges, patterns, **kw)
 
 
 def match_bgp_not_exists(
@@ -314,14 +344,15 @@ def match_bgp_not_exists(
     ...     [("?y", "located in", "?z")])
     DataFrame[x, y]   # employees of employers with NO known location
     """
-    out = match_bgp(
+    edges = serving_edges(edges)
+    out = _match_bgp(
         edges,
         patterns,
         require_anchor=require_anchor,
         allow_product=allow_product,
         filters=filters,
     )
-    neg = match_bgp(
+    neg = _match_bgp(
         edges,
         negative,
         require_anchor=require_anchor,
@@ -360,7 +391,8 @@ def match_bgp_union(
     """
     if not groups:
         raise ValueError("empty UNION")
-    outs = [match_bgp(edges, g, **kw) for g in groups]
+    edges = serving_edges(edges)
+    outs = [_match_bgp(edges, g, **kw) for g in groups]
     all_vars = sorted(set().union(*[set(o.columns) for o in outs]))
     aligned = []
     for o in outs:

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.graph.bgp import _check_patterns, _compile_pattern, _is_var
+from kgforge.graph.serving import serving_edges
 
 _CELL = ("__c0", "__c1", "__c2")
 
@@ -188,6 +189,7 @@ def match_bgp_cycle(
     if chunk_rows < 1:
         raise ValueError(f"chunk_rows must be >= 1, got {chunk_rows}")
     vars_sorted, axes = _cycle_layout(patterns, require_anchor)
+    edges = serving_edges(edges)
     spark = edges.sparkSession
     if shares is None:
         import math

@@ -4,6 +4,13 @@ Scale posture (SURVEY.md §4.2-4.3): AQE on (post-shuffle coalescing, skew
 join splitting, broadcast conversion), Arrow on with bounded record batches
 (the tagger pads per Arrow batch, so batch size caps pad waste and python
 worker memory), UTC session timezone for deterministic timestamp handling.
+
+Listing: on a ``local[...]`` master the driver lists partitioned tables
+itself. Spark's default starts a listing job once a path has more than 32
+subdirectories (a 90-day table's every read ran a 90-task job); in one
+process that job only adds task overhead to the same file-system calls.
+Under any other master Spark's default stays: at crawl scale on object
+stores, listing needs the job's parallelism.
 """
 
 from __future__ import annotations
@@ -11,6 +18,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# paths listed on the driver before Spark starts a listing job (local masters)
+LOCAL_LISTING_THRESHOLD = 100_000
 
 
 def get_spark(
@@ -60,6 +70,11 @@ def get_spark(
             "spark.driver.memory", os.environ.get("KGFORGE_DRIVER_MEMORY", "8g")
         )
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LOCAL_LISTING_THRESHOLD),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

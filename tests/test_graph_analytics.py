@@ -312,8 +312,9 @@ def test_derived_relation_helpers_match_python_count(spark):
 
     want = Counter()
     for d, s, o in rows:
-        want[(d, s)] += 1
-        want[(d, o)] += 1
+        for node in (s, o):
+            if node is not None:
+                want[(d, node)] += 1
     deg = endpoint_degree(df, "subj_id", "obj_id", "day")
     assert deg.columns == ["day", "node", "degree"]
     assert {(r["day"], r["node"]): r["degree"] for r in deg.collect()} == want

@@ -69,6 +69,7 @@ CASES = [
     ("y", ["^rents"], 8, 1), # inverse up the rents chain
     ("b", ["owns", "^owns"], 8, 1),  # undirected closure of owns
     ("x", ["rents", "^owns"], 2, 1),  # mixed directions, truncated
+    ("a", None, 12, 1),      # past one plan's 8 hops: the cone is spent
 ]
 
 
@@ -81,6 +82,22 @@ def test_reachable_matches_bfs(spark, source, preds, max_hops, min_hops):
         ).collect()
     }
     assert got == bfs_oracle(EDGES, source, preds, max_hops, min_hops)
+
+
+@pytest.mark.parametrize("max_hops,min_hops", [(8, 1), (9, 1), (18, 2), (30, 0)])
+def test_long_walk_crosses_plan_blocks(spark, max_hops, min_hops):
+    """A 20-hop chain with a shortcut and a cycle back to its start: the
+    walk continues past each 8-hop plan block with the right distances."""
+    edges = [(f"c{i}", "next", f"c{i + 1}") for i in range(20)]
+    edges += [("c3", "next", "c12"), ("c20", "next", "c0")]
+    df = spark.createDataFrame(edges, "subj_id string, pred string, obj_id string")
+    got = {
+        r["node"]: r["hops"]
+        for r in reachable_from(
+            df, "c0", "next", max_hops=max_hops, min_hops=min_hops
+        ).collect()
+    }
+    assert got == bfs_oracle(edges, "c0", ["next"], max_hops, min_hops)
 
 
 def test_single_pred_string_equals_list(spark):

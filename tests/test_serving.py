@@ -1,0 +1,190 @@
+"""Serving reads of a committed edge table (kgforge/graph/serving.py and
+the session's listing rule): a version is snapshotted on its second
+sighting and never served after a rewrite, the snapshot table stays
+bounded and releases what it drops, the first sighting keeps the pushed-
+down Parquet scan, and a reach call over a snapshot runs as few jobs as
+its hops need."""
+
+from __future__ import annotations
+
+import sys
+import threading
+
+from kgforge.graph import serving
+from kgforge.graph.bgp import match_bgp
+from kgforge.graph.paths import reachable_from
+from kgforge.graph.serving import SNAPSHOTS, serving_edges
+from kgforge.graph.temporal import window_subgraph_topk
+from kgforge.io.tables import write_table
+from kgforge.session import LOCAL_LISTING_THRESHOLD
+
+SCHEMA = "subj_id string, pred string, obj_id string, day string"
+OLD = [
+    ("a", "owns", "b", "2025-01-01"),
+    ("b", "owns", "c", "2025-01-02"),
+    ("c", "owns", "d", "2025-01-03"),
+]
+NEW = [
+    ("a", "owns", "x", "2025-01-01"),
+    ("x", "owns", "y", "2025-01-02"),
+    ("x", "owns", "y", "2025-01-02"),
+]
+
+
+def _write(spark, rows, path):
+    write_table(spark.createDataFrame(rows, SCHEMA), path, "edges", ["day"])
+
+
+def _persisted(spark) -> set[int]:
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+
+
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_rewrite_is_never_served_stale(spark, tmp_path):
+    path = str(tmp_path / "edges")
+    _write(spark, OLD, path)
+    old = spark.read.parquet(path)
+    pattern = [("?x", "owns", "?y")]
+    for _ in range(2):
+        assert _rows(match_bgp(old, pattern)) == [("a", "b"), ("b", "c"), ("c", "d")]
+        assert _rows(reachable_from(old, "a", "owns")) == [("b", 1), ("c", 2), ("d", 3)]
+    snap = serving_edges(old)
+    assert snap is not old and not snap.inputFiles()
+    assert _rdd_id(snap) in _persisted(spark)
+
+    _write(spark, NEW, path)
+    new = spark.read.parquet(path)
+    assert new.sameSemantics(old)  # only the file list tells the versions apart
+    for _ in range(3):
+        assert _rows(match_bgp(new, pattern)) == [("a", "x"), ("x", "y")]
+        assert _rows(reachable_from(new, "a", "owns")) == [("x", 1), ("y", 2)]
+    assert _rdd_id(snap) not in _persisted(spark)
+
+
+def test_first_sighting_keeps_the_pushed_down_scan(spark, tmp_path):
+    path = str(tmp_path / "edges")
+    _write(spark, OLD, path)
+    edges = spark.read.parquet(path)
+    pattern = [("?x", "owns", "?y"), ("?y", "owns", "d")]
+    plans = []
+    for _ in range(3):
+        res = match_bgp(edges, pattern)
+        assert _rows(res.select("x", "y")) == [("b", "c")]
+        plans.append(_plan(res))
+    assert "FileScan parquet" in plans[0]
+    assert "PushedFilters: [IsNotNull(pred), EqualTo(pred,owns)" in plans[0]
+    assert "FileScan" not in plans[2] and "Scan ExistingRDD" in plans[2]
+
+
+def test_snapshot_table_is_bounded(spark, tmp_path):
+    snaps = []
+    for i in range(SNAPSHOTS + 2):
+        path = str(tmp_path / f"edges{i}")
+        _write(spark, OLD[: 1 + i % 3], path)
+        edges = spark.read.parquet(path)
+        serving_edges(edges)
+        snaps.append(serving_edges(edges))
+    live = _persisted(spark)
+    assert len(serving._versions) == SNAPSHOTS
+    assert all(_rdd_id(s) not in live for s in snaps[:2])
+    assert all(_rdd_id(s) in live for s in snaps[2:])
+
+
+def test_snapshot_belongs_to_its_session(spark, tmp_path):
+    path = str(tmp_path / "edges")
+    _write(spark, OLD, path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    assert serving_edges(edges).sparkSession is spark
+    other = spark.newSession()
+    theirs = other.read.parquet(path)
+    assert serving_edges(theirs) is theirs  # a first sighting in that session
+    assert serving_edges(theirs).sparkSession is other
+
+
+def test_one_shot_frames_pass_through(spark):
+    local = spark.createDataFrame([r[:3] for r in OLD], SCHEMA.rsplit(",", 1)[0])
+    checkpoint = local.localCheckpoint()
+    for df in (local, checkpoint, local.select("subj_id", "obj_id")):
+        assert serving_edges(df) is df and serving_edges(df) is df
+
+
+def test_concurrent_sightings_build_one_snapshot(spark, tmp_path):
+    """More threads than cores race on two versions: each version ends
+    with exactly one snapshot, and the table never exceeds its bound."""
+    frames = []
+    for i in range(2):
+        path = str(tmp_path / f"edges{i}")
+        _write(spark, OLD, path)
+        frames.append(spark.read.parquet(path))
+    got = [[] for _ in frames]
+    start = threading.Barrier(8)
+
+    def hammer(k):
+        start.wait(timeout=60)
+        for _ in range(4):
+            got[k % 2].append(serving_edges(frames[k % 2]))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=hammer, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(serving._versions) <= SNAPSHOTS
+    for frame, results in zip(frames, got):
+        assert len(results) == 16
+        snaps = {id(r) for r in results if r is not frame}
+        assert len(snaps) == 1 and sum(r is frame for r in results) == 1
+
+
+def test_window_listing_is_fresh(spark, tmp_path):
+    path = str(tmp_path / "edges")
+    _write(spark, OLD, path)
+    first = window_subgraph_topk(spark, path, "2025-01-01", "2025-01-03")
+    assert sorted(tuple(r)[:3] for r in first.collect()) == [r[:3] for r in OLD]
+    _write(spark, NEW, path)
+    again = window_subgraph_topk(spark, path, "2025-01-01", "2025-01-03")
+    assert sorted(tuple(r) for r in again.collect()) == [
+        ("a", "owns", "x", 1), ("x", "owns", "y", 2)]
+
+
+def test_local_master_lists_on_the_driver(spark):
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(key) == str(LOCAL_LISTING_THRESHOLD)
+
+
+def test_reach_over_a_snapshot_runs_few_jobs(spark, tmp_path):
+    """A 4-hop reach over a snapshotted table: one plan, one job per
+    stage; the per-hop checkpoint loop ran 20 jobs for the same call."""
+    path = str(tmp_path / "edges")
+    chain = [(f"n{i}", "next", f"n{i + 1}", "2025-01-01") for i in range(6)]
+    _write(spark, chain, path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    serving_edges(edges)
+    sc = spark.sparkContext
+    sc.setJobGroup("reach-jobs", "reach over a snapshot")
+    try:
+        rows = _rows(reachable_from(edges, "n0", None, max_hops=4))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == [("n1", 1), ("n2", 2), ("n3", 3), ("n4", 4)]
+    jobs = len(sc.statusTracker().getJobIdsForGroup("reach-jobs"))
+    assert 0 < jobs <= 13, jobs

@@ -244,3 +244,16 @@ def test_contract_queries_share_one_materialization(spark):
     assert os.path.getmtime(manifest) == mtime, (
         "second temporal query must reuse the committed edge table"
     )
+
+
+def test_degree_over_time_has_no_null_node(spark):
+    """A NULL endpoint is not a node: it gets no degree row, and the
+    edge's other endpoint still counts."""
+    from kgforge.graph.temporal import degree_over_time
+
+    df = spark.createDataFrame(
+        [("d1", "a", "b"), ("d1", "a", None), ("d2", None, "b")],
+        "day string, subj_id string, obj_id string",
+    )
+    got = {(r["day"], r["node"]): r["degree"] for r in degree_over_time(df).collect()}
+    assert got == {("d1", "a"): 2, ("d1", "b"): 1, ("d2", "b"): 1}
