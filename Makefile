@@ -23,6 +23,8 @@ kgbench:
 	python3 kgbench/run.py --workload $(WORKLOAD) --seed 7 --seconds 6 --trace 0
 
 # interleaved A/B against another checkout: make kgbench-ab PARENT=<dir> [WORKLOAD= SEED= PAIRS=]
+# clear ~/.cache/kgforge/cds before pair 1, so the run that writes the
+# class-data-sharing archive is in the sample (printed as its own line)
 kgbench-ab:
 	$(PY) tools/kgbench_ab.py $(PARENT) . --workload $(WORKLOAD) --seed $(SEED) --pairs $(PAIRS)
 

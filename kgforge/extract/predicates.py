@@ -23,6 +23,7 @@ relation phrases).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -113,8 +114,11 @@ def canonicalize_predicates(edges_df: DataFrame, pred_col: str = "pred") -> Data
     preds = collect_bounded(
         edges_df.select(pred_col), pred_col, what="distinct predicate set"
     )
-    rows = [(p, canonicalize_pred(p)) for p in preds]
-    map_df = spark.createDataFrame(rows, f"{pred_col} string, canon_pred string")
+    # Arrow, not a list of tuples: a list-built frame runs every read
+    # through Python workers
+    canon = [canonicalize_pred(p) for p in preds]
+    pred_map = pa.table({pred_col: preds, "canon_pred": canon})
+    map_df = spark.createDataFrame(pred_map, f"{pred_col} string, canon_pred string")
     return edges_df.join(F.broadcast(map_df), pred_col, "left").withColumn(
         "canon_pred", F.coalesce(F.col("canon_pred"), F.col(pred_col))
     )

@@ -95,7 +95,10 @@ def _driver_union_find(spark: SparkSession, edges: pa.Table) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    labels = [(n, find(n)) for n in list(parent)]
+    nodes = list(parent)
+    # Arrow, not a list of tuples: a list-built frame runs every read
+    # through Python workers
+    labels = pa.table({"node": nodes, "component": [find(n) for n in nodes]})
     return spark.createDataFrame(labels, "node string, component string")
 
 

@@ -28,10 +28,11 @@ is not registered in Spark's CacheManager, which would match a fresh
 read of a rewritten path against the old cached plan and serve the old
 rows.
 
-The table keeps ``SNAPSHOTS`` versions, least recently used first out;
-an evicted or superseded version's snapshot is unpersisted at once. A
-DataFrame built over a snapshot must therefore be consumed before
-``SNAPSHOTS`` other versions pass through this table.
+The table keeps ``SNAPSHOTS`` versions, least recently used first out.
+An evicted or superseded version only loses the table's reference: a
+lazy result built over its snapshot may still be collected, and Spark's
+ContextCleaner unpersists the checkpointed RDD once no DataFrame holds
+it (on the JVM's next garbage collection).
 """
 
 from __future__ import annotations
@@ -55,14 +56,6 @@ class _Version:
 
 _lock = threading.Lock()
 _versions: list[_Version] = []  # least recently used first
-
-
-def _release(v: _Version) -> None:
-    """Unpersist the checkpointed RDD behind ``v``'s snapshot. A stopped
-    context has already dropped its blocks."""
-    snap, v.snapshot = v.snapshot, None
-    if snap is not None and snap.sparkSession.sparkContext._jsc is not None:
-        snap._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def serving_edges(edges: DataFrame) -> DataFrame:
@@ -90,14 +83,12 @@ def serving_edges(edges: DataFrame) -> DataFrame:
         )
         if v is None:
             _versions.append(_Version(edges, plan_hash, files))
-            while len(_versions) > SNAPSHOTS:
-                _release(_versions.pop(0))
+            del _versions[:-SNAPSHOTS]
             return edges
         _versions.remove(v)
         _versions.append(v)
         if v.files != files:  # the table was rewritten: a new version
-            _release(v)
-            v.frame, v.files = edges, files
+            v.frame, v.files, v.snapshot = edges, files, None
             return edges
         if v.snapshot is None:
             v.snapshot = edges.select(*_COLS).dropDuplicates().localCheckpoint()

@@ -25,6 +25,7 @@ import json
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -170,17 +171,10 @@ def read_manifest(path: str) -> dict:
 
 def write_lineage_table(spark: SparkSession, manifests: list[dict], path: str):
     """Flatten stage manifests into the queryable ``lineage`` table."""
-    rows = []
-    for m in manifests:
-        for entry in m.get("lineage", []):
-            rows.append(
-                (
-                    entry["stage"],
-                    entry["partition_id"],
-                    entry["output_rows"],
-                    entry["checksum"],
-                    entry["ts"],
-                )
-            )
+    entries = [e for m in manifests for e in m.get("lineage", [])]
+    cols = [c.split()[0] for c in LINEAGE_SCHEMA.split(",")]
+    # Arrow, not a list of tuples: a list-built frame runs every read
+    # through Python workers
+    table = pa.table({c: [e[c] for e in entries] for c in cols})
     # tens of rows: one file, not one per createDataFrame slice
-    write_parquet(spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1), path)
+    write_parquet(spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1), path)

@@ -192,3 +192,34 @@ def test_not_exists_plan_is_keyed_anti_join(spark):
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_driver_built_frames_are_local_scans(spark, tmp_path):
+    """The CC labels, the predicate map and the lineage table are built on
+    the driver and handed to the JVM as Arrow: each plan scans a local
+    table, not an RDD of pickled rows that every read sends through
+    Python workers."""
+    import pyarrow as pa
+
+    from kgforge.extract.predicates import canonicalize_predicates
+    from kgforge.graph.cc import _driver_union_find
+    from kgforge.io.tables import LINEAGE_SCHEMA, write_lineage_table
+
+    labels = _driver_union_find(spark, pa.table({"src": ["a", "b"], "dst": ["b", "c"]}))
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        ("a", "a"), ("b", "a"), ("c", "a")]
+    edges = spark.range(3).select(
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("subj_id"),
+        F.lit("acquired").alias("pred"))
+    canon = canonicalize_predicates(edges)
+    assert {r.canon_pred for r in canon.collect()} == {"acquire"}
+    entry = {"stage": "edges", "partition_id": 0, "output_rows": 3,
+             "checksum": "-12", "ts": 1.5}
+    path = str(tmp_path / "lineage")
+    write_lineage_table(spark, [{"lineage": [entry]}, {}], path)
+    lineage = spark.read.parquet(path)
+    assert lineage.schema == spark.createDataFrame([], LINEAGE_SCHEMA).schema
+    assert [r.asDict() for r in lineage.collect()] == [entry]
+    for df in (labels, canon):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -1,7 +1,8 @@
 """Serving reads of a committed edge table (kgforge/graph/serving.py and
 the session's listing rule): a version is snapshotted on its second
 sighting and never served after a rewrite, the snapshot table stays
-bounded and releases what it drops, the first sighting keeps the pushed-
+bounded and drops its reference to what it evicts (a lazy result over an
+evicted snapshot still collects), the first sighting keeps the pushed-
 down Parquet scan, and a reach call over a snapshot runs as few jobs as
 its hops need."""
 
@@ -51,6 +52,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _held(snap) -> bool:
+    return any(v.snapshot is snap for v in serving._versions)
+
+
 def test_rewrite_is_never_served_stale(spark, tmp_path):
     path = str(tmp_path / "edges")
     _write(spark, OLD, path)
@@ -69,7 +74,7 @@ def test_rewrite_is_never_served_stale(spark, tmp_path):
     for _ in range(3):
         assert _rows(match_bgp(new, pattern)) == [("a", "x"), ("x", "y")]
         assert _rows(reachable_from(new, "a", "owns")) == [("x", 1), ("y", 2)]
-    assert _rdd_id(snap) not in _persisted(spark)
+    assert not _held(snap)
 
 
 def test_first_sighting_keeps_the_pushed_down_scan(spark, tmp_path):
@@ -97,8 +102,29 @@ def test_snapshot_table_is_bounded(spark, tmp_path):
         snaps.append(serving_edges(edges))
     live = _persisted(spark)
     assert len(serving._versions) == SNAPSHOTS
-    assert all(_rdd_id(s) not in live for s in snaps[:2])
+    assert not any(_held(s) for s in snaps[:2])
     assert all(_rdd_id(s) in live for s in snaps[2:])
+
+
+def test_lazy_result_outlives_eviction(spark, tmp_path):
+    """A result built over a snapshot and collected only after SNAPSHOTS
+    other versions pushed that snapshot out of the table still reads it."""
+    path = str(tmp_path / "kept")
+    _write(spark, OLD, path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    pattern = [("?x", "owns", "?y")]
+    lazy_bgp = match_bgp(edges, pattern)
+    lazy_reach = reachable_from(edges, "a", "owns")
+    for i in range(SNAPSHOTS):
+        other = str(tmp_path / f"other{i}")
+        _write(spark, NEW, other)
+        frame = spark.read.parquet(other)
+        serving_edges(frame)
+        serving_edges(frame)
+    assert all(v.frame is not edges for v in serving._versions)
+    assert _rows(lazy_bgp) == [("a", "b"), ("b", "c"), ("c", "d")]
+    assert _rows(lazy_reach) == [("b", 1), ("c", 2), ("d", 3)]
 
 
 def test_snapshot_belongs_to_its_session(spark, tmp_path):

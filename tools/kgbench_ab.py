@@ -16,6 +16,10 @@ quartiles, and per metric:
 * the regression bound: the change's median is no worse than the
   parent's by more than the metric's ``bound`` (relative).
 
+Each side's first run is also printed on a line of its own: it can pay a
+one-time cache fill (the change's class-data-sharing archive is written
+by the first session that finds none). It stays in the medians.
+
 It only reads ``kgbench/``; each run's scratch files stay in the
 checkout it ran in, as a plain ``make kgbench`` leaves them.
 """
@@ -94,6 +98,10 @@ def main(argv=None) -> int:
             for s in sides)
         print(f"pair {i + 1} ({order[0]} first) parent/change: {row}  [{health}]",
               flush=True)
+    for s in sides:
+        first = "  ".join(f"{m['name']} {runs[s][0]['metrics'][m['name']]:.4g}"
+                          for m in metrics)
+        print(f"first run, {s}: {first}")
     summary = {}
     for m in metrics:
         vals = {s: [r["metrics"][m["name"]] for r in runs[s]] for s in sides}
