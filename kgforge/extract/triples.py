@@ -1442,7 +1442,7 @@ def _borrow_subject(
       is an object NP) — plus the same no-verb-in-span clause guard.
 
     COMMA-only coordination ("X acquired A, launched B" — no "and") is
-    accepted under a STRICTER grade, and only when the calling tier sets
+    accepted under a STRICTER grade, and only when the caller sets
     ``comma_ok`` (bare-verb relation, no V-P extension — a comma + V-ed +
     PP is a reduced relative on the PREVIOUS NP, "iron foods, launched in
     2020", never a coordinated predicate): the conjunct token must be an
@@ -1689,17 +1689,9 @@ def _extract_participial_appositives(
         if spans and m.start() == prev_end - 1:
             head = head_tokens  # stacked chain: same head NP
         else:
-            prefix = sentence[: m.start()].split()
-            ppairs = [
-                (_clean_token(t), t != t.rstrip(_EDGE_PUNCT)) for t in prefix
-            ]
-            head, _hstart = _trim_subj(ppairs, len(ppairs))
             # the head NP ends at the nearest clause verb ("blue energy
             # ACQUIRED acme corp, founded by…" → head "acme corp")
-            for k in range(len(head) - 1, -1, -1):
-                if head[k] in _VERB_FORMS or head[k] in _BE:
-                    head = head[k + 1 :]
-                    break
+            head = _clause_head(sentence[: m.start()])
         prep = m.group(2)
         arg_raw = m.group(3).split()
         apairs = [(_clean_token(t), t != t.rstrip(_EDGE_PUNCT)) for t in arg_raw]
@@ -1792,8 +1784,8 @@ _REL_CLAUSE_SEG = re.compile(r",\s*(?:who|which|that)\s+([^,]{1,80}?)\s*([,.])")
 
 def _clause_head(prefix_text: str) -> list[str]:
     """Nearest NP left of a comma segment: subject-walk the prefix, then
-    cut at the nearest clause verb (shared with the participial-appositive
-    head logic)."""
+    cut at the nearest clause verb (the head of a relative clause or of a
+    participial appositive)."""
     prefix = prefix_text.split()
     ppairs = [(_clean_token(t), t != t.rstrip(_EDGE_PUNCT)) for t in prefix]
     head, _start = _trim_subj(ppairs, len(ppairs))
@@ -1845,21 +1837,118 @@ def _open_conf(subj_tokens: list[str], obj_tokens: list[str]) -> float:
     )
 
 
+def _lexicon_conf(subj_tokens: list[str], obj_tokens: list[str]) -> float:
+    return round(
+        0.5
+        + 0.25 * min(1.0, len(subj_tokens) / 2)
+        + 0.25 * min(1.0, len(obj_tokens) / 2),
+        4,
+    )
+
+
+def _close_relation(tokens: list[str], boundary: list[bool], end: int) -> int:
+    """ReVerb's ``ADV* P`` close: the index of a relation-ending preposition
+    reached from the head at ``end`` across an unpunctuated adverb run,
+    else ``end``."""
+    if boundary[end]:
+        return end
+    n = len(tokens)
+    j = end + 1
+    while j < n and tokens[j] in _REL_ADVERBS and not boundary[j]:
+        j += 1
+    if j < n and tokens[j] in _REL_PREPS:
+        return j
+    return end
+
+
+def _emit_active(
+    triples: list[tuple[str, str, str, float]],
+    pairs: list[tuple[str, bool]],
+    raw: list[str],
+    tokens: list[str],
+    i: int,
+    rel_end: int,
+    last_subj: list[str] | None,
+    last_vtok: str | None,
+    *,
+    ok: bool = True,
+    conf=_open_conf,
+    modal: bool = True,
+    donate: bool = True,
+) -> tuple[list[str] | None, str | None]:
+    """Emit the active-voice relation ``tokens[i : rel_end + 1]`` of tiers
+    1 and 2b–2d; returns the next ``(last_subj, last_vtok)``.
+
+    An empty subject span borrows the previous conjunct's subject
+    (_borrow_subject); across a bare comma only for a single-token
+    relation, since a multi-token one after a comma ("…iron foods,
+    launched in 2020", "…, merged with X") is a reduced relative on the
+    previous NP, never a coordinated predicate. ``ok`` is the tier's own
+    guard next to the negator gap. With ``modal`` a non-factive modal in
+    the gap prefixes the predicate ("will acquire"; "would have merged
+    with" gives "would merged with"): a future/possible/counterfactual
+    assertion is not the bare fact, and canonicalize_pred folds it
+    downstream. With ``donate`` a relation that lacks only an object
+    ("acme corp EXPANDED RAPIDLY and hired maria lopez") still donates
+    its unambiguous active-voice subject to a following elided-subject
+    conjunct; a negated one donates nothing, as its negation may scope
+    over the whole coordination."""
+    tok = tokens[i]
+    subj_tokens, s_start = _trim_subj(pairs, i)
+    obj_tokens, o_end, o_stop = _obj_span(pairs, rel_end)
+    borrowed = False
+    if not subj_tokens:
+        subj_tokens, borrowed = _borrow_subject(
+            pairs, raw, i, tok, last_subj, last_vtok, obj_tokens,
+            comma_ok=(rel_end == i),
+        )
+    if not (subj_tokens and ok and not _negated(pairs, i - 1)):
+        return last_subj, last_vtok
+    if not obj_tokens:
+        return (subj_tokens, tok) if donate else (last_subj, last_vtok)
+    subj = " ".join(subj_tokens)
+    obj = " ".join(obj_tokens)
+    pred = " ".join(tokens[i : rel_end + 1])
+    if modal:
+        m = _modal_in_gap(pairs, i - 1)
+        if m:
+            pred = f"{m} {pred}"
+    c = conf(subj_tokens, obj_tokens)
+    triples.append((subj, pred, obj, c))
+    if not borrowed:
+        for co_subj in _coord_subjects(pairs, raw, s_start):
+            triples.append((co_subj, pred, obj, c))
+    for co_obj in _coord_objects(pairs, raw, o_end, o_stop):
+        triples.append((subj, pred, co_obj, c))
+    return subj_tokens, tok
+
+
 def extract_triples(
     sentence: str, lang: str = "en"
 ) -> list[tuple[str, str, str, float]]:
     """(subj, pred, obj, conf) tuples from one sentence.
 
-    English — two tiers, leftmost match wins at each position:
-    1. closed-lexicon exact relations (``REL_LEXICON``, longest match,
-       conf ∈ [0.75, 1.0]);
-    2. ReVerb pattern class ``V | V P | V W* P`` (verb dictionary + adverb
-       W* + relation-ending preposition, conf ∈ [0.5, 0.7]), including the
-       passive normalization ``BE + V-ed + by`` → (agent, V-ed, patient).
-    Relative/appositive clauses between commas are skipped so subject
-    spans reach across them. subj = nearest non-stopword span left of the
-    relation; obj = nearest non-stopword span right; conf scales with
-    argument tightness.
+    English — leftmost match wins at each position; the tiers are tried
+    in the order 2a, 2d, 2c, 1, 2b:
+
+    - 2a passive ``BE + V-ed [PP/ADV run] + by`` → (agent, V-ed, patient);
+    - 2d nominal ``BE [DET] NP{1..3} of`` ("is the parent company of");
+    - 2c infinitival ``ASPECTUAL to V [ADV* P]`` ("plans to acquire");
+    - 1 closed-lexicon exact relations (``REL_LEXICON``, longest match,
+      conf ∈ [0.75, 1.0]);
+    - 2b open ReVerb class ``V | V P | V ADV* P`` (verb dictionary +
+      adverbs + relation-ending preposition), with a ``V to V [ADV* P]``
+      control-verb extension.
+
+    Tiers 2a–2d carry conf ∈ [0.5, 0.7]. The active-voice tiers (1,
+    2b–2d) detect their relation span and emit through ``_emit_active``
+    (argument spans, elided-subject borrow, negation, modal prefix,
+    coordination fan-out, subject carry-over); 2a keeps its mirrored
+    block with the agent and patient roles swapped. Relative/appositive
+    clauses between commas are skipped so subject spans reach across
+    them. subj = nearest non-stopword span left of the relation; obj =
+    nearest non-stopword span right; conf scales with argument
+    tightness.
 
     Chinese: bounded regex patterns (``ZH_REL_PATTERNS``)."""
     if lang == "zh":
@@ -1956,11 +2045,9 @@ def extract_triples(
                     # patient is the previous conjunct's subject; last_subj
                     # itself stays unset by this tier (agent/patient topic
                     # ambiguity, same rule as the zh 被-passive)
-                    fill, borrowed = _borrow_subject(
+                    obj_tokens, borrowed = _borrow_subject(
                         pairs, raw, i, tok, last_subj, last_vtok, subj_tokens
                     )
-                    if borrowed:
-                        obj_tokens = fill
                 if subj_tokens and obj_tokens and not _negated(pairs, i - 2):
                     subj = " ".join(subj_tokens)
                     obj = " ".join(obj_tokens)
@@ -2009,34 +2096,14 @@ def extract_triples(
                 and tokens[j] == "of"
                 and tokens[np_start] not in _PARTITIVES
             ):
-                rel_end = j
-                subj_tokens, s_start = _trim_subj(pairs, i)
-                obj_tokens, _oend, o_stop = _obj_span(pairs, rel_end)
-                borrowed = False
-                if not subj_tokens:
-                    fill, borrowed = _borrow_subject(
-                        pairs, raw, i, tok, last_subj, last_vtok, obj_tokens
-                    )
-                    if borrowed:
-                        subj_tokens = fill
-                if (
-                    subj_tokens
-                    and obj_tokens
-                    and not negated_np
-                    and not _negated(pairs, i - 1)
-                ):
-                    subj = " ".join(subj_tokens)
-                    obj = " ".join(obj_tokens)
-                    pred = " ".join(tokens[i : rel_end + 1])
-                    conf = _open_conf(subj_tokens, obj_tokens)
-                    triples.append((subj, pred, obj, conf))
-                    last_subj, last_vtok = subj_tokens, tok
-                    if not borrowed:
-                        for co_subj in _coord_subjects(pairs, raw, s_start):
-                            triples.append((co_subj, pred, obj, conf))
-                    for co_obj in _coord_objects(pairs, raw, _oend, o_stop):
-                        triples.append((subj, pred, co_obj, conf))
-                i = rel_end + 1
+                # this tier has never prefixed a left modal ("will be the
+                # parent company of" → "be the parent company of") and
+                # commits no subject without a triple
+                last_subj, last_vtok = _emit_active(
+                    triples, pairs, raw, tokens, i, j, last_subj, last_vtok,
+                    ok=not negated_np, modal=False, donate=False,
+                )
+                i = j + 1
                 continue
         # tier 2c — infinitival chain: ASPECTUAL + "to" + V [ADV* P]
         # ("plans to acquire", "agreed to merge with"); negative-control
@@ -2052,51 +2119,14 @@ def extract_triples(
             # object ("agreed to improved terms"), not chain verbs
             and tokens[i + 2] in _VERB_STEMS
         ):
-            rel_end = i + 2
-            if not boundary[rel_end]:
-                j = rel_end + 1
-                while j < n and tokens[j] in _REL_ADVERBS and not boundary[j]:
-                    j += 1
-                if j < n and tokens[j] in _REL_PREPS:
-                    rel_end = j
-            subj_tokens, s_start = _trim_subj(pairs, i)
-            obj_tokens, _oend, o_stop = _obj_span(pairs, rel_end)
-            borrowed = False
-            if not subj_tokens:
-                fill, borrowed = _borrow_subject(
-                    pairs, raw, i, tok, last_subj, last_vtok, obj_tokens
-                )
-                if borrowed:
-                    subj_tokens = fill
-            if (
-                subj_tokens
-                and obj_tokens
-                and tok not in _ASPECTUAL_NEG
-                and not _negated(pairs, i - 1)
-            ):
-                subj = " ".join(subj_tokens)
-                obj = " ".join(obj_tokens)
-                pred = " ".join(tokens[i : rel_end + 1])
-                conf = _open_conf(subj_tokens, obj_tokens)
-                triples.append((subj, pred, obj, conf))
-                last_subj, last_vtok = subj_tokens, tok
-                if not borrowed:
-                    for co_subj in _coord_subjects(pairs, raw, s_start):
-                        triples.append((co_subj, pred, obj, conf))
-                for co_obj in _coord_objects(pairs, raw, _oend, o_stop):
-                    triples.append((subj, pred, co_obj, conf))
-            elif (
-                subj_tokens
-                and not obj_tokens
-                and tok not in _ASPECTUAL_NEG
-                and not _negated(pairs, i - 1)
-            ):
-                # uncommitted-subject donation: the chain committed no
-                # triple (adverb-only/empty object) but its active-voice
-                # SUBJECT is unambiguous — donate it so a following
-                # conjunct can still borrow ("X plans to expand rapidly
-                # and HIRED maria lopez")
-                last_subj, last_vtok = subj_tokens, tok
+            rel_end = _close_relation(tokens, boundary, i + 2)
+            # negative-control verbs neither emit nor donate; no left
+            # modal prefix on this tier ("would have agreed to acquire"
+            # → "agreed to acquire")
+            last_subj, last_vtok = _emit_active(
+                triples, pairs, raw, tokens, i, rel_end, last_subj, last_vtok,
+                ok=tok not in _ASPECTUAL_NEG, modal=False,
+            )
             i = rel_end + 1
             continue
         # tier 1 — closed lexicon, longest match (first-token index;
@@ -2112,138 +2142,40 @@ def extract_triples(
                     match = rel
                     break
         if match is not None:
-            k = len(match)
-            subj_tokens, s_start = _trim_subj(pairs, i)
-            obj_tokens, _oend, o_stop = _obj_span(pairs, i + k - 1)
-            borrowed = False
-            if not subj_tokens:
-                # comma coordination only for BARE single-token lexicon
-                # relations ("…iron foods, acquired stellar labs"): a V-P
-                # lexicon match after a comma ("…, merged with X") is
-                # ambiguous with a reduced relative on the previous NP
-                fill, borrowed = _borrow_subject(
-                    pairs, raw, i, tok, last_subj, last_vtok, obj_tokens,
-                    comma_ok=(k == 1),
-                )
-                if borrowed:
-                    subj_tokens = fill
-            if subj_tokens and obj_tokens and not _negated(pairs, i - 1):
-                conf = round(
-                    0.5
-                    + 0.25 * min(1.0, len(subj_tokens) / 2)
-                    + 0.25 * min(1.0, len(obj_tokens) / 2),
-                    4,
-                )
-                subj = " ".join(subj_tokens)
-                obj = " ".join(obj_tokens)
-                pred = " ".join(match)
-                modal = _modal_in_gap(pairs, i - 1)
-                if modal:
-                    # "X WOULD HAVE merged with Y" — counterfactual/future
-                    # closed-lexicon matches carry the modal too
-                    pred = f"{modal} {pred}"
-                triples.append((subj, pred, obj, conf))
-                last_subj, last_vtok = subj_tokens, tok
-                if not borrowed:
-                    for co_subj in _coord_subjects(pairs, raw, s_start):
-                        triples.append((co_subj, pred, obj, conf))
-                for co_obj in _coord_objects(pairs, raw, _oend, o_stop):
-                    triples.append((subj, pred, co_obj, conf))
-            elif (
-                subj_tokens and not obj_tokens and not _negated(pairs, i - 1)
-            ):
-                # uncommitted-subject donation (see tier 2c): no triple
-                # committed, but the active-voice subject is unambiguous
-                last_subj, last_vtok = subj_tokens, tok
-            i += k
+            last_subj, last_vtok = _emit_active(
+                triples, pairs, raw, tokens, i, i + len(match) - 1, last_subj,
+                last_vtok, conf=_lexicon_conf,
+            )
+            i += len(match)
             continue
         # tier 2b — open pattern: V | V P | V ADV* P
         if cls & _TC_OPENV:
-            rel_end = i
-            if not boundary[i]:
-                j = i + 1
-                while j < n and tokens[j] in _REL_ADVERBS and not boundary[j]:
-                    j += 1
-                if j < n and tokens[j] in _REL_PREPS:
-                    rel_end = j
-                if (
-                    rel_end == j
-                    and tokens[j] == "to"
-                    and not boundary[j]
-                    and j + 1 < n
-                    # base form only, as in tier 2c: "moved to GROWING
-                    # markets" / "led to IMPROVED margins" carry
-                    # participial adjectives, not infinitive chains
-                    and tokens[j + 1] in _VERB_STEMS
-                ):
-                    # V-to-V chain for IN-dictionary control verbs
-                    # ("managed to acquire", "moved to expand into"): the
-                    # infinitive verb belongs to the predicate, not the
-                    # object span (which previously swallowed it); allow
-                    # one further adverb/prep close, mirroring tier 2c
-                    rel_end = j + 1
-                    if not boundary[rel_end]:
-                        j2 = rel_end + 1
-                        while (
-                            j2 < n
-                            and tokens[j2] in _REL_ADVERBS
-                            and not boundary[j2]
-                        ):
-                            j2 += 1
-                        if j2 < n and tokens[j2] in _REL_PREPS:
-                            rel_end = j2
-            subj_tokens, s_start = _trim_subj(pairs, i)
-            obj_tokens, _oend, o_stop = _obj_span(pairs, rel_end)
+            rel_end = _close_relation(tokens, boundary, i)
+            if (
+                rel_end > i
+                and tokens[rel_end] == "to"
+                and not boundary[rel_end]
+                and rel_end + 1 < n
+                # base form only, as in tier 2c: "moved to GROWING
+                # markets" / "led to IMPROVED margins" carry
+                # participial adjectives, not infinitive chains
+                and tokens[rel_end + 1] in _VERB_STEMS
+            ):
+                # V-to-V chain for IN-dictionary control verbs
+                # ("managed to acquire", "moved to expand into"): the
+                # infinitive verb belongs to the predicate, not the
+                # object span (which previously swallowed it); allow
+                # one further adverb/prep close, as tier 2c does
+                rel_end = _close_relation(tokens, boundary, rel_end + 1)
             # NOTE: no participle-opening-object rejection here. A mid-round
             # guard tried it ("summer hill PARTNERS acquired X" misreads the
             # plural noun as the pred) but it equally killed legitimate
             # participial modifiers ("manages ESTABLISHED brands") — there is
             # no local discriminator without POS context, so the open tier
             # keeps the rare noun-misread FP (measured in the gold P).
-            borrowed = False
-            if not subj_tokens:
-                # comma coordination only for the BARE-verb shape
-                # (rel_end == i): a V-P relation after a comma ("…iron
-                # foods, launched in 2020") is a reduced relative on the
-                # previous NP, never a coordinated predicate
-                fill, borrowed = _borrow_subject(
-                    pairs, raw, i, tok, last_subj, last_vtok, obj_tokens,
-                    comma_ok=(rel_end == i),
-                )
-                if borrowed:
-                    subj_tokens = fill
-            if subj_tokens and obj_tokens and not _negated(pairs, i - 1):
-                subj = " ".join(subj_tokens)
-                obj = " ".join(obj_tokens)
-                pred = " ".join(tokens[i : rel_end + 1])
-                modal = _modal_in_gap(pairs, i - 1)
-                if modal:
-                    # modality is preserved IN the predicate ("will
-                    # acquire", "would acquired" for the counterfactual
-                    # perfect) — a future/possible assertion is not the
-                    # bare fact; canonicalize_pred folds it downstream
-                    pred = f"{modal} {pred}"
-                conf = _open_conf(subj_tokens, obj_tokens)
-                triples.append((subj, pred, obj, conf))
-                last_subj, last_vtok = subj_tokens, tok
-                if not borrowed:
-                    for co_subj in _coord_subjects(pairs, raw, s_start):
-                        triples.append((co_subj, pred, obj, conf))
-                for co_obj in _coord_objects(pairs, raw, _oend, o_stop):
-                    triples.append((subj, pred, co_obj, conf))
-            elif (
-                subj_tokens and not obj_tokens and not _negated(pairs, i - 1)
-            ):
-                # uncommitted-subject donation: "acme corp EXPANDED
-                # RAPIDLY and hired maria lopez" — the first conjunct's
-                # all-adverb object commits no triple, but its
-                # active-voice subject is syntactically unambiguous, so a
-                # following elided-subject conjunct may inherit it. The
-                # passive tier still never donates (agent/patient topic
-                # ambiguity), and a NEGATED first conjunct stays silent:
-                # its negation may scope over the whole coordination
-                # ("never expanded and hired…"), so nothing is donated.
-                last_subj, last_vtok = subj_tokens, tok
+            last_subj, last_vtok = _emit_active(
+                triples, pairs, raw, tokens, i, rel_end, last_subj, last_vtok
+            )
             i = rel_end + 1
             continue
         i += 1

@@ -46,6 +46,7 @@ unanchored-scan refusal.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -173,8 +174,11 @@ def reachable_from(
             ).select("p.*")
         )
     if min_hops == 0:
+        # Arrow, not a list of tuples: a list-built frame runs every read
+        # through Python workers
         zero = seen.sparkSession.createDataFrame(
-            [(source, 0)], "node string, hops int"
+            pa.table({"node": [source], "hops": pa.array([0], pa.int32())}),
+            "node string, hops int",
         )
         # pred* : the source at distance 0 wins over any cycle distance
         seen = zero.unionByName(seen.where(F.col("node") != F.lit(source)))

@@ -147,17 +147,24 @@ def write_table(
     return manifest
 
 
-def commit_manifest(path: str, manifest: dict) -> None:
-    """Atomic manifest commit: write-then-rename so a crash mid-dump
-    never leaves a half-written manifest that reads as committed. Shared
-    by write_table and the incremental N-Triples exporter."""
-    mp = manifest_path(path)
-    tmp = mp + ".tmp"
+def write_durable(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically and durably: write a
+    sibling temp file, fsync it, then rename it over ``path``. A crash
+    never leaves a half-written file at ``path``, and the bytes are on
+    disk before the rename points ``path`` at them."""
+    tmp = path + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
+        fh.write(text)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, mp)
+    os.replace(tmp, path)
+
+
+def commit_manifest(path: str, manifest: dict) -> None:
+    """Manifest commit through ``write_durable``, so a crash mid-dump
+    never leaves a half-written manifest that reads as committed. Shared
+    by write_table and the incremental N-Triples exporter."""
+    write_durable(manifest_path(path), json.dumps(manifest, indent=1))
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

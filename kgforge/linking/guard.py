@@ -32,11 +32,12 @@ def collect_bounded(
     limit: int = ALIAS_CLOSURE_LIMIT,
     what: str = "alias dictionary",
 ) -> list:
-    """Collect the distinct values of ``column`` for closure shipping,
-    sorted (deterministic matcher order). Driver memory is bounded by
+    """Collect the distinct non-NULL values of ``column`` for closure
+    shipping, sorted (deterministic matcher order); NULL is never an alias
+    to match nor a predicate to map. Driver memory is bounded by
     ``limit + 1`` rows regardless of the input size; exceeding ``limit``
     raises ValueError naming the distributed fallback."""
-    rows = df.select(column).distinct().limit(limit + 1).collect()
+    rows = df.select(column).dropna().distinct().limit(limit + 1).collect()
     if len(rows) > limit:
         raise ValueError(
             f"{what} exceeds the closure-shipping bound ({limit:,} distinct"

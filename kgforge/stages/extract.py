@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.extract.triples import extract_triples
+from kgforge.extract.triples import (
+    _EN_SENT_SPLIT,
+    _ZH_SENT_SPLIT,
+    extract_triples,
+)
 from kgforge.stages.rows import map_rows
 
 SENTENCES_SCHEMA = (
@@ -24,19 +28,16 @@ TRIPLES_SCHEMA = (
     "subj string, pred string, obj string, conf double"
 )
 
-# ender chars per language family (kgforge.extract.triples.split_sentences)
-_EN_SPLIT = r"(?<=[.?!])\s+"
-_ZH_SPLIT = r"(?<=[。？！?!])\s*"
-
 
 def sentences(norm: DataFrame) -> DataFrame:
     """norm_text(url, lang, text_norm, ...) → sentences(url, sent_id,
     sentence). Trailing empty split parts are filtered; mid-document empty
     parts cannot occur (English enders always carry a following space, zh
     split is zero-width), so ``sent_id`` equals the oracle's enumeration."""
+    # split_sentences' own ender patterns, run as Java regexes
     parts = F.when(
-        F.col("lang") == "zh", F.split("text_norm", _ZH_SPLIT)
-    ).otherwise(F.split("text_norm", _EN_SPLIT))
+        F.col("lang") == "zh", F.split("text_norm", _ZH_SENT_SPLIT.pattern)
+    ).otherwise(F.split("text_norm", _EN_SENT_SPLIT.pattern))
     return (
         norm.select(
             "url",

@@ -29,7 +29,7 @@ of a merged batch); a marker from another lineage raises, since skipping
 (new ids ≤ old pointer) or re-merging (availableNow re-lists all input under
 a fresh checkpoint) would corrupt the state. Then write every version the
 stream's ``step`` returns with overwrite (a replayed half-written version
-clobbers itself), and flip the marker LAST by atomic rename
+clobbers itself), and flip the marker LAST by an fsynced atomic rename
 (``_flip_marker``): a crash before the flip leaves the previous version
 current and the replay re-applies the batch.
 
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge.io.tables import write_parquet
+from kgforge.io.tables import write_durable, write_parquet
 
 WEBDOCS_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -161,10 +161,7 @@ def _checkpoint_identity(checkpoint_dir: str) -> str:
     os.makedirs(checkpoint_dir, exist_ok=True)
     id_file = os.path.join(checkpoint_dir, "kgforge_lineage_id")
     if not os.path.exists(id_file):
-        tmp_id = id_file + ".tmp"
-        with open(tmp_id, "w") as f:
-            f.write(uuid.uuid4().hex)
-        os.replace(tmp_id, id_file)
+        write_durable(id_file, uuid.uuid4().hex)
     with open(id_file) as f:
         return f.read().strip()
 
@@ -242,16 +239,14 @@ def _marker_last_applied(
 
 
 def _flip_marker(marker: str, ckpt_identity: str, batch_id: int) -> None:
-    """Atomically point ``_LATEST`` at a committed state version — always
-    AFTER the version's data write, so a crash between them leaves the
-    previous pointer valid."""
+    """Atomically and durably point ``_LATEST`` at a committed state
+    version — always AFTER the version's data write, so a crash between
+    them leaves the previous pointer valid."""
     import json
-    import os
 
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"checkpoint": ckpt_identity, "batch_id": batch_id}, f)
-    os.replace(tmp, marker)
+    write_durable(
+        marker, json.dumps({"checkpoint": ckpt_identity, "batch_id": batch_id})
+    )
 
 
 def _stream_versioned_state(

@@ -245,6 +245,18 @@ def test_pred_canon_broadcast_plan(spark):
     assert got == {"acquired": "acquire", "purchased": "acquire", "bought": "acquire"}
 
 
+def test_pred_canon_keeps_null_predicate_rows(spark):
+    """A NULL predicate next to a real one is not part of the predicate
+    map (the sorted distinct collect cannot compare it): its row passes
+    through the left join with a NULL canon_pred."""
+    rows = [("a", "acquired", "b", "u", 0, "d"), ("a", None, "b", "u", 1, "d")]
+    got = sorted(
+        (r["pred"] or "", r["canon_pred"])
+        for r in canonicalize_predicates(_edges(spark, rows)).collect()
+    )
+    assert got == [("", None), ("acquired", "acquire")]
+
+
 def test_lpa_early_exit_preserves_semantics(spark):
     """Runs of more than 5 rounds, which checkpoint the labels every other
     round, equal the direct synchronous simulation run for exactly that

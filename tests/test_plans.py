@@ -195,14 +195,15 @@ def test_not_exists_plan_is_keyed_anti_join(spark):
 
 
 def test_driver_built_frames_are_local_scans(spark, tmp_path):
-    """The CC labels, the predicate map and the lineage table are built on
-    the driver and handed to the JVM as Arrow: each plan scans a local
-    table, not an RDD of pickled rows that every read sends through
-    Python workers."""
+    """The CC labels, the predicate map, the lineage table and the hop-0
+    row of ``reachable_from(min_hops=0)`` are built on the driver and
+    handed to the JVM as Arrow: each plan scans a local table, not an RDD
+    of pickled rows that every read sends through Python workers."""
     import pyarrow as pa
 
     from kgforge.extract.predicates import canonicalize_predicates
     from kgforge.graph.cc import _driver_union_find
+    from kgforge.graph.paths import reachable_from
     from kgforge.io.tables import LINEAGE_SCHEMA, write_lineage_table
 
     labels = _driver_union_find(spark, pa.table({"src": ["a", "b"], "dst": ["b", "c"]}))
@@ -220,6 +221,12 @@ def test_driver_built_frames_are_local_scans(spark, tmp_path):
     lineage = spark.read.parquet(path)
     assert lineage.schema == spark.createDataFrame([], LINEAGE_SCHEMA).schema
     assert [r.asDict() for r in lineage.collect()] == [entry]
-    for df in (labels, canon):
+    chain = spark.createDataFrame(pa.table(
+        {"subj_id": ["a", "b"], "pred": ["p", "p"], "obj_id": ["b", "c"]}))
+    reach = reachable_from(chain, "a", max_hops=2, min_hops=0)
+    assert reach.schema.simpleString() == "struct<node:string,hops:int>"
+    assert sorted(tuple(r) for r in reach.collect()) == [
+        ("a", 0), ("b", 1), ("c", 2)]
+    for df in (labels, canon, reach):
         plan = _plan(df)
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

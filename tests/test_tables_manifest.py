@@ -30,6 +30,28 @@ def test_missing_and_wrong_stage(tmp_path):
     assert tables.is_committed(d, "b") is False
 
 
+def test_state_markers_sync_before_rename(tmp_path, monkeypatch):
+    """The streaming ``_LATEST`` flip and the checkpoint lineage id are
+    fsynced before the rename that publishes them, as a manifest is."""
+    from kgforge.streaming import ingest
+
+    calls = []
+    fsync, replace = os.fsync, os.replace
+    monkeypatch.setattr(os, "fsync", lambda fd: (calls.append("fsync"), fsync(fd))[1])
+    monkeypatch.setattr(
+        os, "replace", lambda a, b: (calls.append("replace"), replace(a, b))[1]
+    )
+    marker = str(tmp_path / "_LATEST")
+    ingest._flip_marker(marker, "lineage-1", 3)
+    assert calls == ["fsync", "replace"]
+    with open(marker) as fh:
+        assert json.load(fh) == {"checkpoint": "lineage-1", "batch_id": 3}
+    calls.clear()
+    ident = ingest._checkpoint_identity(str(tmp_path / "ckpt"))
+    assert calls == ["fsync", "replace"] and len(ident) == 32
+    assert glob.glob(str(tmp_path / "**" / "*.tmp"), recursive=True) == []
+
+
 def test_write_table_commit_atomic(spark, tmp_path):
     d = str(tmp_path / "t3")
     df = spark.range(10).selectExpr("id", "id * 2 as v")
