@@ -1873,7 +1873,6 @@ def _emit_active(
     *,
     ok: bool = True,
     conf=_open_conf,
-    modal: bool = True,
     donate: bool = True,
 ) -> tuple[list[str] | None, str | None]:
     """Emit the active-voice relation ``tokens[i : rel_end + 1]`` of tiers
@@ -1884,8 +1883,8 @@ def _emit_active(
     relation, since a multi-token one after a comma ("…iron foods,
     launched in 2020", "…, merged with X") is a reduced relative on the
     previous NP, never a coordinated predicate. ``ok`` is the tier's own
-    guard next to the negator gap. With ``modal`` a non-factive modal in
-    the gap prefixes the predicate ("will acquire"; "would have merged
+    guard next to the negator gap. A non-factive modal in the gap
+    prefixes the predicate ("will acquire"; "would have merged
     with" gives "would merged with"): a future/possible/counterfactual
     assertion is not the bare fact, and canonicalize_pred folds it
     downstream. With ``donate`` a relation that lacks only an object
@@ -1909,10 +1908,9 @@ def _emit_active(
     subj = " ".join(subj_tokens)
     obj = " ".join(obj_tokens)
     pred = " ".join(tokens[i : rel_end + 1])
-    if modal:
-        m = _modal_in_gap(pairs, i - 1)
-        if m:
-            pred = f"{m} {pred}"
+    m = _modal_in_gap(pairs, i - 1)
+    if m:
+        pred = f"{m} {pred}"
     c = conf(subj_tokens, obj_tokens)
     triples.append((subj, pred, obj, c))
     if not borrowed:
@@ -2096,12 +2094,12 @@ def extract_triples(
                 and tokens[j] == "of"
                 and tokens[np_start] not in _PARTITIVES
             ):
-                # this tier has never prefixed a left modal ("will be the
-                # parent company of" → "be the parent company of") and
-                # commits no subject without a triple
+                # a left modal prefixes the predicate as in tiers 1 and
+                # 2b ("will be the parent company of"); this tier commits
+                # no subject without a triple
                 last_subj, last_vtok = _emit_active(
                     triples, pairs, raw, tokens, i, j, last_subj, last_vtok,
-                    ok=not negated_np, modal=False, donate=False,
+                    ok=not negated_np, donate=False,
                 )
                 i = j + 1
                 continue
@@ -2120,12 +2118,12 @@ def extract_triples(
             and tokens[i + 2] in _VERB_STEMS
         ):
             rel_end = _close_relation(tokens, boundary, i + 2)
-            # negative-control verbs neither emit nor donate; no left
-            # modal prefix on this tier ("would have agreed to acquire"
-            # → "agreed to acquire")
+            # negative-control verbs neither emit nor donate; a left
+            # modal prefixes the predicate ("would have agreed to
+            # acquire" → "would agreed to acquire")
             last_subj, last_vtok = _emit_active(
                 triples, pairs, raw, tokens, i, rel_end, last_subj, last_vtok,
-                ok=tok not in _ASPECTUAL_NEG, modal=False,
+                ok=tok not in _ASPECTUAL_NEG,
             )
             i = rel_end + 1
             continue

@@ -30,7 +30,14 @@ Repeated calls: every public entry point resolves its edges frame once
 through ``graph.serving.serving_edges``. A call that repeats over the
 same committed table version reads that version's shared distinct
 snapshot from the second call on; a first sighting keeps the pushed-
-down scan described above.
+down scan described above. Over the snapshot a pattern compiles with no
+``dropDuplicates``: the snapshot is a set, and a filter + projection of
+a set is a set when every constant term is one equality (the projection
+keeps every variable column; a repeated variable drops only an equal
+column). An alternation term breaks that — ``("?x", ["p1", "p2"],
+"?y")`` over ``(a p1 b), (a p2 b)`` projects ``(a, b)`` twice — so such
+a pattern keeps its dedup. A first sighting, and any frame that is not
+a snapshot, keeps every pattern's dedup.
 """
 
 from __future__ import annotations
@@ -38,13 +45,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.graph.serving import serving_edges
+from kgforge.graph.serving import committed_read, serving_edges
 
 _COLS = ("subj_id", "pred", "obj_id")
+_ALTERNATION = (list, tuple, set, frozenset)  # the SPARQL alternation term types
 
 
 def _is_var(term: str) -> bool:
     return isinstance(term, str) and term.startswith("?")
+
+
+def _needs_dedup(pattern: tuple[str, str, str], over_snapshot: bool) -> bool:
+    """Whether a compiled pattern needs its distinct projection: always
+    over a frame that may repeat rows, and over the distinct serving
+    snapshot only for an alternation term (see the module docstring)."""
+    return not over_snapshot or any(isinstance(t, _ALTERNATION) for t in pattern)
 
 
 def _compile_pattern(
@@ -67,7 +82,7 @@ def _compile_pattern(
                 df = df.where(F.col(col) == F.col(first))
             else:
                 var_for_col[col] = term
-        elif isinstance(term, (list, tuple, set, frozenset)):
+        elif isinstance(term, _ALTERNATION):
             alts = sorted(term)
             if not alts:
                 raise ValueError(
@@ -147,9 +162,11 @@ def match_bgp(
     ...           filters=["x != y"])
     DataFrame[x: string, y: string]
     """
+    served = serving_edges(edges)
     return _match_bgp(
-        serving_edges(edges),
+        served,
         patterns,
+        over_snapshot=served is not edges,
         require_anchor=require_anchor,
         allow_product=allow_product,
         filters=filters,
@@ -160,17 +177,20 @@ def _match_bgp(
     edges: DataFrame,
     patterns: list[tuple[str, str, str]],
     *,
+    over_snapshot: bool = False,
     require_anchor: bool = True,
     allow_product: bool = False,
     filters: list[str] | None = None,
 ) -> DataFrame:
     """``match_bgp`` over an already resolved edges frame: the body every
-    entry point of this module shares after its one ``serving_edges``."""
+    entry point of this module shares after its one ``serving_edges``.
+    ``over_snapshot`` says ``edges`` is the distinct serving snapshot."""
     if not patterns:
         raise ValueError("empty BGP")
     _check_patterns(patterns, require_anchor, per_pattern_anchor=False)
     compiled = [
-        _compile_pattern(edges, p, ix) for ix, p in enumerate(patterns)
+        _compile_pattern(edges, p, ix, dedup=_needs_dedup(p, over_snapshot))
+        for ix, p in enumerate(patterns)
     ]
     # greedy reorder: always join a pattern sharing a variable with the
     # bound prefix when one exists (keeps every join keyed). Fully-ground
@@ -217,8 +237,9 @@ def _match_bgp(
         # filtering a set yields a set, so the no-final-distinct argument
         # below still holds
         out = out.where(F.expr(expr))
-    # no final dropDuplicates: every compiled pattern is already distinct,
-    # and an equi-join of SETS on their shared variables is a set (so is a
+    # no final dropDuplicates: every compiled pattern is already distinct
+    # (deduplicated, or a projection of the snapshot set), and an
+    # equi-join of SETS on their shared variables is a set (so is a
     # cross by the one-row ground marker, and so is any filter of a set)
     # — a trailing global distinct would re-shuffle the entire result for
     # nothing (measured: the full 5M-binding hub chain pays one extra
@@ -254,12 +275,15 @@ def match_bgp_optional(
     _check_patterns(
         optional, kw.get("require_anchor", True), per_pattern_anchor=True
     )
-    edges = serving_edges(edges)
-    out = _match_bgp(edges, patterns, **kw)
+    served = serving_edges(edges)
+    over_snapshot = served is not edges
+    out = _match_bgp(served, patterns, over_snapshot=over_snapshot, **kw)
     required_vars = set(out.columns)
     introduced: set[str] = set()
     for ix, pat in enumerate(optional):
-        df, vs = _compile_pattern(edges, pat, ix)
+        df, vs = _compile_pattern(
+            served, pat, ix, dedup=_needs_dedup(pat, over_snapshot)
+        )
         shared = sorted(required_vars & vs)
         new = vs - required_vars
         if not shared:
@@ -305,10 +329,12 @@ def match_bgp_window(
     PartitionFilter — the scan is proportional to the window, not the
     table (plan-gated in tests/test_bgp.py). Semantics: the whole BGP is
     evaluated within one window (every pattern must hold there), the
-    windowed-serving counterpart of window_subgraph_topk. The read is
-    built per call, so it skips the serving snapshot and keeps its
-    pruned scan."""
-    edges = spark.read.parquet(edges_path).where(
+    windowed-serving counterpart of window_subgraph_topk. The window is
+    filtered per call, so it skips the serving snapshot and keeps its
+    pruned scan; the unfiltered read is ``serving.committed_read``'s one
+    frame per committed table version, so a repeated call reuses its
+    listing."""
+    edges = committed_read(spark, edges_path).where(
         (F.col("day") >= lo) & (F.col("day") <= hi)
     )
     return _match_bgp(edges, patterns, **kw)
@@ -344,17 +370,20 @@ def match_bgp_not_exists(
     ...     [("?y", "located in", "?z")])
     DataFrame[x, y]   # employees of employers with NO known location
     """
-    edges = serving_edges(edges)
+    served = serving_edges(edges)
+    over_snapshot = served is not edges
     out = _match_bgp(
-        edges,
+        served,
         patterns,
+        over_snapshot=over_snapshot,
         require_anchor=require_anchor,
         allow_product=allow_product,
         filters=filters,
     )
     neg = _match_bgp(
-        edges,
+        served,
         negative,
+        over_snapshot=over_snapshot,
         require_anchor=require_anchor,
         allow_product=allow_product,
     )
@@ -391,8 +420,11 @@ def match_bgp_union(
     """
     if not groups:
         raise ValueError("empty UNION")
-    edges = serving_edges(edges)
-    outs = [_match_bgp(edges, g, **kw) for g in groups]
+    served = serving_edges(edges)
+    outs = [
+        _match_bgp(served, g, over_snapshot=served is not edges, **kw)
+        for g in groups
+    ]
     all_vars = sorted(set().union(*[set(o.columns) for o in outs]))
     aligned = []
     for o in outs:

@@ -19,11 +19,16 @@ data, no driver action per hop):
 * the (src, nxt) pair relation is the predicate filter (and ``^pred``
   inversion) of that frame, NOT deduplicated: a repeated pair only
   repeats a join row that the next aggregate drops;
-* ``seen`` holds (node, least hops). Hop h left-joins ``seen`` with the
-  pairs on node = src under the condition hops = h - 1, so only the
-  frontier — the nodes first reached at h - 1 — matches; every row then
-  contributes itself and its match, and ``min(hops)`` per node keeps the
-  shortest distance, which also stops cycles from growing the frontier;
+* ``seen`` holds (node, least hops). Hop 1 is the source's pairs as
+  (nxt, 1) rows, aggregated only when it is the last hop: a repeated
+  hop-1 row carries the same hops = 1, so hop 2 repeats its match and
+  hop 2's aggregate collapses the copies, and a NULL ``nxt`` matches no
+  pair and is dropped there. Hop h left-joins ``seen`` with the pairs on
+  node = src under the condition hops = h - 1, so only the frontier —
+  the nodes first reached at h - 1 — matches; every row then
+  contributes itself and its match, and ``min(hops)`` per node (NULL
+  nodes dropped) keeps the shortest distance, which also stops cycles
+  from growing the frontier;
 * at query scale the pair relation is the broadcast side, one broadcast
   exchange reused by every hop (a left join can only build its right
   side); above the broadcast threshold each hop is a sort-merge join
@@ -143,11 +148,11 @@ def reachable_from(
     # rel is not deduplicated: a repeated pair only repeats a join row,
     # which the per-hop least-distance aggregate drops. Self-loops stay —
     # SPARQL pred+ reaches a self-looping node from itself in one hop.
-    seen = _least(
-        rel.where(F.col("src") == F.lit(source)).select(
-            F.col("nxt").alias("node"), F.lit(1).alias("hops")
-        )
+    seen = rel.where(F.col("src") == F.lit(source)).select(
+        F.col("nxt").alias("node"), F.lit(1).alias("hops")
     )
+    if max_hops == 1:
+        seen = _least(seen)
     for hop in range(2, max_hops + 1):
         if hop % _PLAN_HOPS == 1:
             # block boundary: cut the lineage; stop once the last hop

@@ -13,6 +13,13 @@ frame, at every public entry point that takes one, to:
 * from the SECOND sighting of the same version on, its distinct
   ``(subj_id, pred, obj_id)`` set, ``localCheckpoint``ed once.
 
+The snapshot is a SET, and its readers rely on that: ``graph.bgp``
+compiles a pattern over it without the per-pattern ``dropDuplicates``
+(unless the pattern has an alternation term), and a caller tells the
+snapshot from a first sighting by identity (``serving_edges(e) is not
+e``). ``reachable_from`` does not need it: its per-hop least-distance
+aggregate drops repeated pairs either way.
+
 A version is the frame's plan (``semanticHash``, confirmed with
 ``sameSemantics``), its listed files (``inputFiles()``) and its
 SparkSession. The file list is part of the key because a rewritten path
@@ -33,6 +40,18 @@ An evicted or superseded version only loses the table's reference: a
 lazy result built over its snapshot may still be collected, and Spark's
 ContextCleaner unpersists the checkpointed RDD once no DataFrame holds
 it (on the JVM's next garbage collection).
+
+Windowed reads (``temporal.window_subgraph_topk``,
+``temporal.window_edge_diff_topk``, ``bgp.match_bgp_window``) take a
+path, not a frame, and filter the read by day on every call, so they
+never reach a snapshot. ``committed_read`` gives them one
+``spark.read.parquet(path)`` frame per committed version instead: its
+file index holds the listing and the inferred schema, so a repeated
+window call neither relists the table nor re-infers its schema. The key
+is the session, the path and the committed manifest's ``(committed_at,
+checksum)``. A path with no committed manifest is read fresh on every
+call, and a ``write_table`` overwrite deletes the manifest before it
+writes, so a rewritten table is never served from its old listing.
 """
 
 from __future__ import annotations
@@ -40,7 +59,9 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from kgforge.io.tables import read_manifest
 
 SNAPSHOTS = 4  # versions kept (LRU); a constant, not an option
 _COLS = ("subj_id", "pred", "obj_id")
@@ -56,6 +77,9 @@ class _Version:
 
 _lock = threading.Lock()
 _versions: list[_Version] = []  # least recently used first
+# committed_read's frames: (session, path, (committed_at, checksum), frame),
+# least recently used first
+_reads: list[tuple[SparkSession, str, tuple, DataFrame]] = []
 
 
 def serving_edges(edges: DataFrame) -> DataFrame:
@@ -93,3 +117,26 @@ def serving_edges(edges: DataFrame) -> DataFrame:
         if v.snapshot is None:
             v.snapshot = edges.select(*_COLS).dropDuplicates().localCheckpoint()
         return v.snapshot
+
+
+def committed_read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, one frame per committed version of
+    the table at ``path`` in ``spark`` (see the module docstring); a
+    path with no committed manifest is read fresh."""
+    try:
+        m = read_manifest(path)
+    except (OSError, ValueError):  # no manifest, or a torn one
+        return spark.read.parquet(path)
+    if m.get("status") != "committed":
+        return spark.read.parquet(path)
+    version = (m.get("committed_at"), m.get("checksum"))
+    with _lock:
+        # at most one entry per (session, path): a new version supersedes it
+        hit = next((r for r in _reads if r[0] is spark and r[1] == path), None)
+        if hit is not None:
+            _reads.remove(hit)
+        if hit is None or hit[2] != version:
+            hit = (spark, path, version, spark.read.parquet(path))
+        _reads.append(hit)
+        del _reads[:-SNAPSHOTS]
+        return hit[3]

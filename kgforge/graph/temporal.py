@@ -15,6 +15,11 @@ the partition layout actually buys something at 100 TB:
   tests/test_temporal.py: PartitionFilters carries the day bounds and the
   pruned-file count matches the window).
 
+Both window queries (and ``bgp.match_bgp_window``) read the path through
+``graph.serving.committed_read``: one parquet frame per committed table
+version, so a repeated window call reuses its listing and schema instead
+of relisting and re-inferring the table, and a rewrite is read fresh.
+
 At 10^12 docs the edges table spans years of crawl days; an analyst's
 "what changed this week" query must not scan the decade. Day partitioning
 + pruning is the standard Iceberg answer; this is its offline twin.
@@ -26,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.graph.analytics import endpoint_degree
+from kgforge.graph.serving import committed_read
 
 # contract-query window: 15 of the fixture's 90 crawl days (FIXTURES.md)
 WINDOW_LO = "2025-01-10"
@@ -76,7 +82,7 @@ def window_edge_diff_topk(
     diff touches two windows' worth of files, never the full table. The
     anti join shuffles only the two windows' distinct edge sets (AQE picks
     broadcast when window A's distinct set is small)."""
-    edges = spark.read.parquet(path)
+    edges = committed_read(spark, path)
     in_b = edges.where((F.col("day") >= b_lo) & (F.col("day") <= b_hi))
     seen_a = (
         edges.where((F.col("day") >= a_lo) & (F.col("day") <= a_hi))
@@ -102,7 +108,7 @@ def window_subgraph_topk(
     """Top-k (subj_id, pred, obj_id) edge counts within [lo, hi], reading
     the day-partitioned table so the day predicate becomes a partition
     filter (scan proportional to the window, not the table)."""
-    edges = spark.read.parquet(path)
+    edges = committed_read(spark, path)
     windowed = edges.where((F.col("day") >= lo) & (F.col("day") <= hi))
     return (
         windowed.groupBy("subj_id", "pred", "obj_id")

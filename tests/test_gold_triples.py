@@ -608,6 +608,18 @@ GOLD = [
     # predicate (surface "would acquired"; canonicalize_pred → acquire)
     ("Iron foods will be acquired by acme corp.", "en",
      [("acme corp", "will acquired", "iron foods")], True),
+    # the nominal (2d) and infinitival (2c) tiers keep a left modal the
+    # same way as the lexicon and open tiers
+    ("Acme corp will be the parent company of iron foods.", "en",
+     [("acme corp", "will be the parent company of", "iron foods")], True),
+    ("Acme corp would have agreed to acquire iron foods.", "en",
+     [("acme corp", "would agreed to acquire", "iron foods")], True),
+    ("Nova media may be a subsidiary of apex holdings.", "en",
+     [("nova media", "may be a subsidiary of", "apex holdings")], True),
+    ("Nova media may have planned to merge with golden software.", "en",
+     [("nova media", "may planned to merge with", "golden software")], True),
+    ("Acme corp will merge with iron foods.", "en",
+     [("acme corp", "will merge with", "iron foods")], True),
     ("Acme corp manages established brands.", "en",
      [("acme corp", "manages", "established brands")], False),
     # adversarial: the participial-modifier object is extracted correctly,

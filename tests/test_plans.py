@@ -230,3 +230,25 @@ def test_driver_built_frames_are_local_scans(spark, tmp_path):
     for df in (labels, canon, reach):
         plan = _plan(df)
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_bgp_over_a_snapshot_plans_no_dedup(spark, tmp_path):
+    """Over the distinct serving snapshot a single-constant pattern's
+    optimized plan holds no Aggregate; an alternation pattern keeps its
+    one dedup Aggregate."""
+    from kgforge.graph.bgp import match_bgp
+    from kgforge.graph.serving import serving_edges
+
+    path = str(tmp_path / "edges_pq")
+    _kg_edges(spark).select("subj_id", "pred", "obj_id").write.parquet(path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    assert serving_edges(edges) is not edges
+
+    def optimized(patterns) -> str:
+        qe = match_bgp(edges, patterns)._jdf.queryExecution()
+        return qe.optimizedPlan().toString()
+
+    assert "Aggregate" not in optimized(
+        [("?a", "acquired", "?b"), ("?b", "works at", "?c")])
+    assert optimized([("?a", ["acquired", "works at"], "?b")]).count("Aggregate") == 1

@@ -3,18 +3,22 @@ multigraphs (hypothesis-generated edge lists over 2 predicates — NOT the
 fixture distribution), the WCOJ cyclic matcher, property-path
 reachability, and NOT EXISTS must agree with independent brute-force
 implementations written here (the same discipline as
-test_properties_graph.py). Spark round-trips are slow, so examples are
-capped and deadlines disabled; the graphs stay small but cover
-multi-edges, self-loops, hubs, and disconnected pieces."""
+test_properties_graph.py), and a BGP over the distinct serving snapshot
+(no per-pattern dedup) must equal its first-sighting result. Spark
+round-trips are slow, so examples are capped and deadlines disabled; the
+graphs stay small but cover multi-edges, self-loops, hubs, and
+disconnected pieces."""
 
 import itertools
-from collections import deque
+import tempfile
+from collections import Counter, deque
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from kgforge.graph.bgp import match_bgp_not_exists
+from kgforge.graph.bgp import match_bgp, match_bgp_not_exists
 from kgforge.graph.paths import reachable_from
+from kgforge.graph.serving import serving_edges
 from kgforge.graph.wcoj import match_bgp_cycle
 
 NODES = [f"n{i}" for i in range(8)]
@@ -48,7 +52,11 @@ def _oracle_bgp(edges, patterns):
         ok = True
         for (s, p, o), pat in zip(combo, patterns):
             for val, term in zip((s, p, o), pat):
-                if term.startswith("?"):
+                if isinstance(term, list):  # alternation
+                    if val not in term:
+                        ok = False
+                        break
+                elif term.startswith("?"):
                     if bind.setdefault(term[1:], val) != val:
                         ok = False
                         break
@@ -120,3 +128,40 @@ def test_not_exists_matches_brute_force(spark, edges):
     got = match_bgp_not_exists(_df(spark, edges), NE_REQUIRED, NE_NEGATIVE)
     rows = set(tuple(sorted(zip(got.columns, r))) for r in got.collect())
     assert rows == want
+
+
+SNAPSHOT_BGPS = [
+    [("?x", "p", "?y"), ("?y", "q", "?z")],  # chain
+    [("?x", "p", "?y"), ("?x", "q", "?z"), ("?x", "p", "n0")],  # star
+    [("?x", "p", "?x")],  # repeated variable
+    [("?x", "?r", "?y"), ("?y", "q", "?x")],  # variable predicate
+    [("?x", ["p", "q"], "?y")],  # alternation
+    [("?x", ["p", "q"], "?y"), ("?y", "p", "?z")],  # alternation in a chain
+]
+
+
+@given(
+    edges=edge_lists,
+    repeats=st.integers(1, 20),
+    twins=st.integers(1, 5),
+    patterns=st.sampled_from(SNAPSHOT_BGPS),
+)
+@SERVE_SETTINGS
+def test_bgp_over_a_snapshot_matches_first_sighting(
+    spark, tmp_path, edges, repeats, twins, patterns
+):
+    """Repeated assertions reach the first sighting; the snapshot holds
+    each once. Both results equal the brute-force twin as multisets. A
+    twin is an edge restated under the other predicate, the pair an
+    alternation term projects to one binding twice."""
+    path = tempfile.mkdtemp(dir=tmp_path)  # one table version per example
+    flip = {"p": "q", "q": "p"}
+    rows = edges + edges[:repeats] + [(s, flip[p], o) for s, p, o in edges[:twins]]
+    _df(spark, rows).write.mode("overwrite").parquet(path)
+    frame = spark.read.parquet(path)
+    want = Counter(_oracle_bgp(rows, patterns))
+    first = match_bgp(frame, patterns)
+    assert serving_edges(frame) is not frame
+    again = match_bgp(frame, patterns)
+    for got in (first, again):
+        assert Counter(tuple(sorted(zip(got.columns, r))) for r in got.collect()) == want

@@ -3,8 +3,9 @@ the session's listing rule): a version is snapshotted on its second
 sighting and never served after a rewrite, the snapshot table stays
 bounded and drops its reference to what it evicts (a lazy result over an
 evicted snapshot still collects), the first sighting keeps the pushed-
-down Parquet scan, and a reach call over a snapshot runs as few jobs as
-its hops need."""
+down Parquet scan, a BGP over a snapshot skips the per-pattern dedup
+except for an alternation term, and the serving calls over one committed
+version run a pinned number of Spark jobs."""
 
 from __future__ import annotations
 
@@ -54,6 +55,28 @@ def _rows(df):
 
 def _held(snap) -> bool:
     return any(v.snapshot is snap for v in serving._versions)
+
+
+def _jobs(spark, group: str, call):
+    """(Spark jobs, sorted rows) of collecting ``call()`` in its own job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = _rows(call())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+
+def _snapshotted(spark, rows, path):
+    """A committed day table at ``path``, read once and sighted twice, so
+    every later serving call over the read gets its snapshot."""
+    _write(spark, rows, path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    assert serving_edges(edges) is not edges
+    return edges
 
 
 def test_rewrite_is_never_served_stale(spark, tmp_path):
@@ -196,21 +219,74 @@ def test_local_master_lists_on_the_driver(spark):
     assert spark.conf.get(key) == str(LOCAL_LISTING_THRESHOLD)
 
 
+def test_alternation_over_a_snapshot_keeps_its_dedup(spark, tmp_path):
+    """Two predicates of one alternation project the same binding: the
+    pattern keeps its dedup over the snapshot, where plain patterns drop
+    theirs."""
+    rows = [("a", "p1", "b", "2025-01-01"), ("a", "p2", "b", "2025-01-02"),
+            ("a", "p1", "b", "2025-01-03")]
+    path = str(tmp_path / "edges")
+    _write(spark, rows, path)
+    edges = spark.read.parquet(path)
+    for _ in range(3):
+        got = match_bgp(edges, [("?x", ["p1", "p2"], "?y")])
+        assert [tuple(r) for r in got.collect()] == [("a", "b")]
+    assert serving_edges(edges) is not edges
+
+
 def test_reach_over_a_snapshot_runs_few_jobs(spark, tmp_path):
     """A 4-hop reach over a snapshotted table: one plan, one job per
-    stage; the per-hop checkpoint loop ran 20 jobs for the same call."""
-    path = str(tmp_path / "edges")
+    stage, and no hop-1 aggregate of its own; the per-hop checkpoint
+    loop ran 20 jobs for the same call."""
     chain = [(f"n{i}", "next", f"n{i + 1}", "2025-01-01") for i in range(6)]
-    _write(spark, chain, path)
-    edges = spark.read.parquet(path)
-    serving_edges(edges)
-    serving_edges(edges)
-    sc = spark.sparkContext
-    sc.setJobGroup("reach-jobs", "reach over a snapshot")
-    try:
-        rows = _rows(reachable_from(edges, "n0", None, max_hops=4))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    edges = _snapshotted(spark, chain, str(tmp_path / "edges"))
+    jobs, rows = _jobs(
+        spark, "reach-jobs", lambda: reachable_from(edges, "n0", None, max_hops=4))
     assert rows == [("n1", 1), ("n2", 2), ("n3", 3), ("n4", 4)]
-    jobs = len(sc.statusTracker().getJobIdsForGroup("reach-jobs"))
-    assert 0 < jobs <= 13, jobs
+    assert jobs == 5
+
+
+TRIANGLE = [
+    ("a", "p", "b", "2025-01-01"), ("b", "q", "c", "2025-01-02"),
+    ("c", "r", "a", "2025-01-03"), ("a", "p", "b", "2025-01-03"),
+    ("c", "p", "d", "2025-01-02"), ("d", "q", "a", "2025-01-01"),
+]
+
+
+def test_bgp_over_a_snapshot_runs_no_dedup_jobs(spark, tmp_path):
+    """Over the distinct snapshot a 2-pattern chain runs 2 jobs and a
+    3-cycle 3; with a dedup per pattern they ran 4 and 6."""
+    edges = _snapshotted(spark, TRIANGLE, str(tmp_path / "edges"))
+    chain = [("?x", "p", "?y"), ("?y", "q", "?z")]
+    cycle = chain + [("?z", "r", "?x")]
+    got = (_jobs(spark, "chain-jobs", lambda: match_bgp(edges, chain)),
+           _jobs(spark, "cycle-jobs", lambda: match_bgp(edges, cycle)))
+    assert got == ((2, [("b", "a", "c"), ("d", "c", "a")]), (3, [("a", "c", "b")]))
+
+
+def test_window_reuses_its_committed_read(spark, tmp_path):
+    """A second window call on one committed version reuses the first
+    call's parquet frame: 2 jobs, where a fresh read ran 3."""
+    path = str(tmp_path / "edges")
+    _write(spark, TRIANGLE, path)
+
+    def call():
+        return window_subgraph_topk(spark, path, "2025-01-01", "2025-01-02")
+
+    want = [("a", "p", "b", 1), ("b", "q", "c", 1), ("c", "p", "d", 1),
+            ("d", "q", "a", 1)]
+    assert _jobs(spark, "window-first", call)[1] == want
+    assert _jobs(spark, "window-again", call) == (2, want)
+
+
+def test_uncommitted_window_reads_fresh(spark, tmp_path):
+    """A table with no committed manifest is read fresh on every call."""
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(OLD, SCHEMA).write.partitionBy("day").parquet(path)
+    first = window_subgraph_topk(spark, path, "2025-01-01", "2025-01-03")
+    assert len(first.collect()) == 3
+    new = spark.createDataFrame(NEW, SCHEMA)
+    new.write.mode("overwrite").partitionBy("day").parquet(path)
+    again = window_subgraph_topk(spark, path, "2025-01-01", "2025-01-03")
+    assert sorted(tuple(r) for r in again.collect()) == [
+        ("a", "owns", "x", 1), ("x", "owns", "y", 2)]

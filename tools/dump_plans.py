@@ -172,6 +172,34 @@ def main() -> int:
         "materialized or shuffled (cells provably disjoint, "
         "tests/test_wcoj.py).",
     )
+    from kgforge.graph.paths import reachable_from
+    from kgforge.graph.serving import serving_edges
+
+    served_path = os.path.join(os.path.dirname(edges_path), "edges_served")
+    bare_edges.write.parquet(served_path)
+    served = spark.read.parquet(served_path)
+    serving_edges(served)
+    serving_edges(served)  # the second sighting snapshots the version
+    dump(
+        "match_bgp chain over the serving snapshot",
+        match_bgp(
+            served,
+            [("?a", "acquired", "?b"), ("?b", "works at", "?c")],
+        ),
+        "A repeated call reads the version's distinct localCheckpointed "
+        "snapshot (Scan ExistingRDD): no parquet scan and no per-pattern "
+        "dedup, so no Aggregate — the snapshot is a set (serving.py, "
+        "gated in tests/test_plans.py).",
+    )
+    source = served.orderBy("subj_id").first()["subj_id"]
+    dump(
+        "reachable_from, 4 hops over the serving snapshot",
+        reachable_from(served, source, None, max_hops=4),
+        "One plan for the whole BFS: hop 1 is the source's pairs with no "
+        "aggregate of its own; each later hop left-joins the frontier with "
+        "the pair relation (one shared broadcast) and keeps min(hops) per "
+        "node.",
+    )
     print("\n".join(out))
     spark.stop()
     return 0
