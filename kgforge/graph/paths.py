@@ -29,16 +29,26 @@ data, no driver action per hop):
   contributes itself and its match, and ``min(hops)`` per node (NULL
   nodes dropped) keeps the shortest distance, which also stops cycles
   from growing the frontier;
-* at query scale the pair relation is the broadcast side, one broadcast
-  exchange reused by every hop (a left join can only build its right
-  side); above the broadcast threshold each hop is a sort-merge join
-  whose pair-side exchange is likewise shared;
+* over a small version's snapshot, which ``serving`` coalesces to one
+  partition, the pair relation is the broadcast side of every hop's
+  left join and no hop aggregate plans an exchange: a 4-hop call runs
+  2 jobs (the broadcast and the result). Over a larger frame each
+  hop's aggregate shuffles on ``node``; above the broadcast threshold
+  each hop is a sort-merge join whose pair-side exchange is shared;
+* each hop is built from SQL expression strings (``inline(array(struct,
+  struct))``, a string join condition, ``min(hops)`` as an expression),
+  not Column objects: every Column function is a round trip through the
+  Python gateway. With Column objects and PySpark's call-site capture
+  (``session.py``) a 4-hop call made about 1200 round trips; it now
+  makes about 110;
 * past ``_PLAN_HOPS`` (8) hops the plan is cut: ``seen`` is
   localCheckpointed every 8 hops and the walk stops once the last hop
   reached no new node. On the 6262-edge kgbench table one plan cost the
   same as the cut plan at 12-16 hops and about twice as much at 24-32
   (its planning and adaptive re-planning grow with depth), while the cut
-  adds a job and a checkpoint per block.
+  adds a job and a checkpoint per block. The checkpoint reports no
+  partitioning, so over a one-partition snapshot it is ``coalesce(1)``ed
+  again and the next block plans no exchange either.
 
 Scale notes (100 TB): an ANCHORED ``pred+`` explores one entity's
 forward cone — frontier size is bounded by the cone, not the graph, and
@@ -55,7 +65,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.graph.serving import serving_edges
+from kgforge.graph.serving import is_one_partition, serving_edges
 
 
 # hops planned as one query; a deeper walk checkpoints every _PLAN_HOPS
@@ -66,11 +76,7 @@ _PLAN_HOPS = 8
 def _least(df: DataFrame) -> DataFrame:
     """(node, least hops) over (node, hops) rows; a NULL endpoint is not
     a node."""
-    return (
-        df.where(F.col("node").isNotNull())
-        .groupBy("node")
-        .agg(F.min("hops").alias("hops"))
-    )
+    return df.where("node IS NOT NULL").groupBy("node").agg(F.expr("min(hops) AS hops"))
 
 
 def reachable_from(
@@ -128,55 +134,49 @@ def reachable_from(
         parts = []
         if forward:
             parts.append(
-                edges.where(F.col("pred").isin(forward)).select(
-                    F.col("subj_id").alias("src"), F.col("obj_id").alias("nxt")
+                edges.where(F.col("pred").isin(forward)).selectExpr(
+                    "subj_id AS src", "obj_id AS nxt"
                 )
             )
         if inverse:
             parts.append(
-                edges.where(F.col("pred").isin(inverse)).select(
-                    F.col("obj_id").alias("src"), F.col("subj_id").alias("nxt")
+                edges.where(F.col("pred").isin(inverse)).selectExpr(
+                    "obj_id AS src", "subj_id AS nxt"
                 )
             )
         rel = parts[0]
         for p in parts[1:]:
             rel = rel.unionByName(p)
     else:
-        rel = edges.select(
-            F.col("subj_id").alias("src"), F.col("obj_id").alias("nxt")
-        )
+        rel = edges.selectExpr("subj_id AS src", "obj_id AS nxt")
     # rel is not deduplicated: a repeated pair only repeats a join row,
     # which the per-hop least-distance aggregate drops. Self-loops stay —
     # SPARQL pred+ reaches a self-looping node from itself in one hop.
-    seen = rel.where(F.col("src") == F.lit(source)).select(
-        F.col("nxt").alias("node"), F.lit(1).alias("hops")
+    seen = rel.where(F.col("src") == F.lit(source)).selectExpr(
+        "nxt AS node", "1 AS hops"
     )
     if max_hops == 1:
         seen = _least(seen)
+    # a checkpoint reports no partitioning: over a one-partition snapshot
+    # it is coalesced again, so the next block plans no exchange either
+    recoalesce = max_hops > _PLAN_HOPS and is_one_partition(edges)
     for hop in range(2, max_hops + 1):
         if hop % _PLAN_HOPS == 1:
             # block boundary: cut the lineage; stop once the last hop
             # reached no new node
             seen = seen.localCheckpoint()
-            if seen.where(F.col("hops") == hop - 1).isEmpty():
+            if seen.where(f"hops = {hop - 1}").isEmpty():
                 break
+            if recoalesce:
+                seen = seen.coalesce(1)
         # the frontier (nodes first reached at hop - 1) joins its out-pairs;
         # every other seen node passes through the left join unmatched.
         # The join key is node alone, so every hop shares one pair exchange.
-        frontier_pairs = (F.col("node") == F.col("src")) & (
-            F.col("hops") == hop - 1
-        )
+        # SQL strings, not Column objects: each Column is a gateway call
         seen = _least(
-            seen.join(rel, frontier_pairs, "left").select(
-                F.explode(
-                    F.array(
-                        F.struct("node", "hops"),
-                        F.struct(
-                            F.col("nxt").alias("node"), F.lit(hop).alias("hops")
-                        ),
-                    )
-                ).alias("p")
-            ).select("p.*")
+            seen.join(rel, F.expr(f"node = src AND hops = {hop - 1}"), "left").selectExpr(
+                f"inline(array(struct(node, hops), struct(nxt AS node, {hop} AS hops)))"
+            )
         )
     if min_hops == 0:
         # Arrow, not a list of tuples: a list-built frame runs every read
@@ -188,5 +188,5 @@ def reachable_from(
         # pred* : the source at distance 0 wins over any cycle distance
         seen = zero.unionByName(seen.where(F.col("node") != F.lit(source)))
     elif min_hops > 1:
-        seen = seen.where(F.col("hops") >= F.lit(min_hops))
+        seen = seen.where(f"hops >= {min_hops}")
     return seen

@@ -29,11 +29,33 @@ version's snapshot is released. A frame that lists no files (a
 checkpoint, ``createDataFrame``, a streaming frame) has no version and
 always passes through.
 
+Identity fast path: a frame OBJECT already keyed to a version skips
+``inputFiles()``, ``semanticHash()`` and ``sameSemantics()`` (listing
+alone is about 180 gateway round trips for a 90-file table). An
+uncached frame's file index never re-lists, so the same object lists
+the same files. A cached frame takes the full key every time:
+``refreshByPath`` can re-list its index.
+
 ``localCheckpoint`` rather than ``cache()``: the checkpointed scan
 reports no partitioning, so join planning over it is unchanged, and it
 is not registered in Spark's CacheManager, which would match a fresh
 read of a rewritten path against the old cached plan and serve the old
 rows.
+
+A small version is one partition. Both per-version frames, the
+snapshot and ``committed_read``'s read, go through one rule once per
+version: if the optimizer's size estimate of the frame
+(``optimizedPlan().stats().sizeInBytes``) is at most the session's
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the frame is
+``coalesce(1)``ed, and the planner sees ``SinglePartition``. Over it,
+``reachable_from``'s per-hop ``min(hops)`` aggregates, BGP alternation
+dedups, the NOT EXISTS distinct, the UNION dedup and a window's count
++ top-k plan no exchange. AQE would coalesce those shuffles into one
+partition anyway, so only their stage boundaries (a Spark job each, and
+its closure cleaning) go: a 4-hop reach runs 2 jobs instead of 5, a
+window 1 instead of 2. Filters still push below the ``Coalesce``, so a
+window keeps its day ``PartitionFilters``. A version above the size
+keeps its partitions and its plans.
 
 The table keeps ``SNAPSHOTS`` versions, least recently used first out.
 An evicted or superseded version only loses the table's reference: a
@@ -85,8 +107,15 @@ _reads: list[tuple[SparkSession, str, tuple, DataFrame]] = []
 def serving_edges(edges: DataFrame) -> DataFrame:
     """``edges`` on the first sighting of its table version, the
     version's shared distinct ``(subj_id, pred, obj_id)`` snapshot from
-    the second on (see the module docstring for the key and the release
-    rule)."""
+    the second on (see the module docstring for the key, the identity
+    fast path and the release rule)."""
+    if not edges.is_cached:  # only a cached frame's file index can re-list
+        with _lock:
+            v = next((v for v in _versions if v.frame is edges), None)
+            if v is not None:
+                _versions.remove(v)
+                _versions.append(v)
+                return _snapshot(v)
     if edges.isStreaming or not set(_COLS) <= set(edges.columns):
         return edges
     files = tuple(sorted(edges.inputFiles()))
@@ -114,9 +143,41 @@ def serving_edges(edges: DataFrame) -> DataFrame:
         if v.files != files:  # the table was rewritten: a new version
             v.frame, v.files, v.snapshot = edges, files, None
             return edges
-        if v.snapshot is None:
-            v.snapshot = edges.select(*_COLS).dropDuplicates().localCheckpoint()
-        return v.snapshot
+        return _snapshot(v)
+
+
+def _snapshot(v: _Version) -> DataFrame:
+    """The version's snapshot, built on first use (caller holds
+    ``_lock``)."""
+    if v.snapshot is None:
+        v.snapshot = _one_partition_if_small(
+            v.frame.select(*_COLS).dropDuplicates().localCheckpoint()
+        )
+    return v.snapshot
+
+
+def _one_partition_if_small(frame: DataFrame) -> DataFrame:
+    """``frame.coalesce(1)`` when the optimizer's size estimate of
+    ``frame`` is at most the session's advisory partition size, else
+    ``frame`` (see the module docstring)."""
+    jspark = frame.sparkSession._jsparkSession
+    sql_conf = frame.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    limit = jspark.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return frame.coalesce(1) if size <= limit else frame
+
+
+def is_one_partition(frame: DataFrame) -> bool:
+    """Whether ``frame``'s plan ends in a ``coalesce(1)``, as a small
+    version's frames do."""
+    plan = frame._jdf.logicalPlan()
+    return (
+        plan.nodeName() == "Repartition"
+        and plan.numPartitions() == 1
+        and not plan.shuffle()
+    )
 
 
 def committed_read(spark: SparkSession, path: str) -> DataFrame:
@@ -136,7 +197,8 @@ def committed_read(spark: SparkSession, path: str) -> DataFrame:
         if hit is not None:
             _reads.remove(hit)
         if hit is None or hit[2] != version:
-            hit = (spark, path, version, spark.read.parquet(path))
+            read = _one_partition_if_small(spark.read.parquet(path))
+            hit = (spark, path, version, read)
         _reads.append(hit)
         del _reads[:-SNAPSHOTS]
         return hit[3]

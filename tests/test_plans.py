@@ -252,3 +252,39 @@ def test_bgp_over_a_snapshot_plans_no_dedup(spark, tmp_path):
     assert "Aggregate" not in optimized(
         [("?a", "acquired", "?b"), ("?b", "works at", "?c")])
     assert optimized([("?a", ["acquired", "works at"], "?b")]).count("Aggregate") == 1
+
+
+def test_small_serving_versions_plan_no_shuffle(spark, tmp_path):
+    """A small version runs in one partition: reachable_from over its
+    snapshot plans no hash exchange (the per-hop aggregates need none),
+    also past the 8-hop lineage cut, and a window over its committed
+    read plans no exchange at all while the day bounds stay partition
+    filters on the scan."""
+    from kgforge.graph.paths import reachable_from
+    from kgforge.graph.serving import serving_edges
+    from kgforge.graph.temporal import materialize_edges_by_day, window_subgraph_topk
+    from kgforge.io.tables import write_table
+
+    path = str(tmp_path / "edges_by_day")
+    materialize_edges_by_day(_kg_edges(spark), path)
+    edges = spark.read.parquet(path)
+    serving_edges(edges)
+    assert serving_edges(edges) is not edges
+    source = edges.orderBy("subj_id").first()["subj_id"]
+    plan = _plan(reachable_from(edges, source, None, max_hops=4))
+    assert "HashAggregate" in plan and "Exchange hashpartitioning" not in plan, plan
+
+    chain_path = str(tmp_path / "chain")
+    chain = [(f"n{i}", "next", f"n{i + 1}", "2025-01-01") for i in range(12)]
+    write_table(spark.createDataFrame(chain, "subj_id string, pred string, obj_id string, "
+                                             "day string"), chain_path, "edges", ["day"])
+    chain_edges = spark.read.parquet(chain_path)
+    serving_edges(chain_edges)
+    deep = reachable_from(chain_edges, "n0", "next", max_hops=12)
+    assert sorted(r.hops for r in deep.collect()) == list(range(1, 13))
+    plan = _plan(deep)
+    assert "Scan ExistingRDD" in plan and "Exchange hashpartitioning" not in plan, plan
+
+    window = _plan(window_subgraph_topk(spark, path, "2025-01-10", "2025-01-24"))
+    assert "Exchange" not in window, window
+    assert "PartitionFilters: [isnotnull(day" in window and "2025-01-24" in window, window

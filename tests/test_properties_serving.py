@@ -3,8 +3,10 @@ multigraphs (hypothesis-generated edge lists over 2 predicates — NOT the
 fixture distribution), the WCOJ cyclic matcher, property-path
 reachability, and NOT EXISTS must agree with independent brute-force
 implementations written here (the same discipline as
-test_properties_graph.py), and a BGP over the distinct serving snapshot
-(no per-pattern dedup) must equal its first-sighting result. Spark
+test_properties_graph.py), a BGP over the distinct serving snapshot
+(no per-pattern dedup) must equal its first-sighting result, and a small
+version served in one partition must answer BGPs, reaches and windows
+with the rows of the same version served in many. Spark
 round-trips are slow, so examples are capped and deadlines disabled; the
 graphs stay small but cover multi-edges, self-loops, hubs, and
 disconnected pieces."""
@@ -18,7 +20,9 @@ from hypothesis import strategies as st
 
 from kgforge.graph.bgp import match_bgp, match_bgp_not_exists
 from kgforge.graph.paths import reachable_from
-from kgforge.graph.serving import serving_edges
+from kgforge.graph.serving import committed_read, is_one_partition, serving_edges
+from kgforge.graph.temporal import window_subgraph_topk
+from kgforge.io.tables import write_table
 from kgforge.graph.wcoj import match_bgp_cycle
 
 NODES = [f"n{i}" for i in range(8)]
@@ -165,3 +169,67 @@ def test_bgp_over_a_snapshot_matches_first_sighting(
     again = match_bgp(frame, patterns)
     for got in (first, again):
         assert Counter(tuple(sorted(zip(got.columns, r))) for r in got.collect()) == want
+
+
+DAYS = ["2025-01-01", "2025-01-02", "2025-01-03"]
+# a 12-edge chain from n0, so a reach crosses reachable_from's 8-hop cut
+CHAIN = [("n0", "p", "c1", DAYS[0])] + [
+    (f"c{i}", "p", f"c{i + 1}", DAYS[i % 3]) for i in range(1, 12)
+]
+
+
+def _version(spark, tmp_path, rows, one_partition):
+    """A committed day table of ``rows``, read once and sighted twice,
+    and its committed read: both in one partition, or with the advisory
+    partition size set below their size estimate while they are made, so
+    both keep their partitions."""
+    path = tempfile.mkdtemp(dir=tmp_path)
+    write_table(
+        spark.createDataFrame(rows, "subj_id string, pred string, obj_id string, day string"),
+        path, "edges", ["day"],
+    )
+    frame = spark.read.parquet(path)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    if not one_partition:
+        spark.conf.set(key, "1b")
+    try:
+        serving_edges(frame)
+        served = (serving_edges(frame), committed_read(spark, path))
+    finally:
+        spark.conf.unset(key)
+    assert [is_one_partition(df) for df in served] == [one_partition] * 2
+    return frame, path
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.sampled_from(NODES), st.sampled_from(PREDS),
+                  st.sampled_from(NODES), st.sampled_from(DAYS)),
+        min_size=1, max_size=20,
+    ),
+    patterns=st.sampled_from(SNAPSHOT_BGPS[:2] + SNAPSHOT_BGPS[4:]),
+    src=st.sampled_from(NODES),
+    window=st.sampled_from([(DAYS[0], DAYS[1]), (DAYS[1], DAYS[2]), (DAYS[0], DAYS[2])]),
+)
+@settings(SERVE_SETTINGS, max_examples=5)
+def test_one_partition_version_matches_many(spark, tmp_path, edges, patterns, src, window):
+    """BGP chains, stars and alternations, reaches with ``min_hops=0``
+    and past the 8-hop cut, and a window give equal multisets of rows
+    over a one-partition version and a many-partition one."""
+    rows = edges + CHAIN
+    sides = [_version(spark, tmp_path, rows, one) for one in (True, False)]
+
+    def answers(frame, path):
+        return [
+            Counter(tuple(r) for r in df.collect())
+            for df in (
+                match_bgp(frame, patterns),
+                reachable_from(frame, src, ["p", "^q"], max_hops=4, min_hops=0),
+                reachable_from(frame, "n0", "p", max_hops=12),
+                window_subgraph_topk(spark, path, *window, k=len(rows)),
+            )
+        ]
+
+    one, many = (answers(*side) for side in sides)
+    assert one == many
+    assert one[2][("c12", 12)] == 1  # the walk went on past the cut

@@ -4,8 +4,10 @@ sighting and never served after a rewrite, the snapshot table stays
 bounded and drops its reference to what it evicts (a lazy result over an
 evicted snapshot still collects), the first sighting keeps the pushed-
 down Parquet scan, a BGP over a snapshot skips the per-pattern dedup
-except for an alternation term, and the serving calls over one committed
-version run a pinned number of Spark jobs."""
+except for an alternation term, a small version runs in one partition
+and a large one keeps its partitions, a frame already keyed to a version
+is not listed again, and the serving calls over one committed version
+run a pinned number of Spark jobs."""
 
 from __future__ import annotations
 
@@ -15,7 +17,7 @@ import threading
 from kgforge.graph import serving
 from kgforge.graph.bgp import match_bgp
 from kgforge.graph.paths import reachable_from
-from kgforge.graph.serving import SNAPSHOTS, serving_edges
+from kgforge.graph.serving import SNAPSHOTS, is_one_partition, serving_edges
 from kgforge.graph.temporal import window_subgraph_topk
 from kgforge.io.tables import write_table
 from kgforge.session import LOCAL_LISTING_THRESHOLD
@@ -42,7 +44,12 @@ def _persisted(spark) -> set[int]:
 
 
 def _rdd_id(df) -> int:
-    return df._jdf.queryExecution().analyzed().rdd().id()
+    """The id of the checkpointed RDD under ``df``, through the
+    ``coalesce(1)`` of a small version."""
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() != "LogicalRDD":
+        plan = plan.child()
+    return plan.rdd().id()
 
 
 def _plan(df) -> str:
@@ -234,16 +241,65 @@ def test_alternation_over_a_snapshot_keeps_its_dedup(spark, tmp_path):
     assert serving_edges(edges) is not edges
 
 
-def test_reach_over_a_snapshot_runs_few_jobs(spark, tmp_path):
-    """A 4-hop reach over a snapshotted table: one plan, one job per
-    stage, and no hop-1 aggregate of its own; the per-hop checkpoint
-    loop ran 20 jobs for the same call."""
-    chain = [(f"n{i}", "next", f"n{i + 1}", "2025-01-01") for i in range(6)]
-    edges = _snapshotted(spark, chain, str(tmp_path / "edges"))
+CHAIN = [(f"n{i}", "next", f"n{i + 1}", "2025-01-01") for i in range(6)]
+
+
+def _reach_jobs(spark, group, edges):
     jobs, rows = _jobs(
-        spark, "reach-jobs", lambda: reachable_from(edges, "n0", None, max_hops=4))
+        spark, group, lambda: reachable_from(edges, "n0", None, max_hops=4))
     assert rows == [("n1", 1), ("n2", 2), ("n3", 3), ("n4", 4)]
-    assert jobs == 5
+    return jobs
+
+
+def test_reach_over_a_snapshot_runs_few_jobs(spark, tmp_path):
+    """A 4-hop reach over a small snapshotted table: one plan over one
+    partition, so the pair broadcast and the result are its only jobs;
+    with an exchange per hop aggregate it ran 5, and the per-hop
+    checkpoint loop ran 20."""
+    edges = _snapshotted(spark, CHAIN, str(tmp_path / "edges"))
+    assert is_one_partition(serving_edges(edges))
+    assert _reach_jobs(spark, "reach-small", edges) == 2
+
+
+def test_large_version_keeps_its_partitions(spark, tmp_path):
+    """A version whose size estimate exceeds the advisory partition size
+    when it is snapshotted is not coalesced, and reach keeps its per-hop
+    exchanges: 5 jobs."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1b")
+    try:
+        edges = _snapshotted(spark, CHAIN, str(tmp_path / "edges"))
+    finally:
+        spark.conf.unset(key)
+    assert not is_one_partition(serving_edges(edges))
+    assert _reach_jobs(spark, "reach-large", edges) == 5
+
+
+def test_repeated_calls_on_one_frame_list_its_files_once(spark, tmp_path, monkeypatch):
+    """A frame object already keyed to a version skips ``inputFiles``
+    (and the plan comparison); a cached frame, whose file index a
+    refresh can re-list, does not."""
+    path = str(tmp_path / "edges")
+    _write(spark, OLD, path)
+    edges = spark.read.parquet(path)
+    listed = []
+    input_files = type(edges).inputFiles
+
+    def counted(self):
+        listed.append(self)
+        return input_files(self)
+
+    monkeypatch.setattr(type(edges), "inputFiles", counted)
+    pattern = [("?x", "owns", "?y")]
+    for _ in range(3):
+        assert _rows(match_bgp(edges, pattern)) == [("a", "b"), ("b", "c"), ("c", "d")]
+    assert listed == [edges]
+    edges.cache()
+    try:
+        assert _rows(match_bgp(edges, pattern)) == [("a", "b"), ("b", "c"), ("c", "d")]
+        assert listed == [edges, edges]
+    finally:
+        edges.unpersist()
 
 
 TRIANGLE = [
@@ -266,7 +322,9 @@ def test_bgp_over_a_snapshot_runs_no_dedup_jobs(spark, tmp_path):
 
 def test_window_reuses_its_committed_read(spark, tmp_path):
     """A second window call on one committed version reuses the first
-    call's parquet frame: 2 jobs, where a fresh read ran 3."""
+    call's parquet frame, coalesced to one partition as the version is
+    small: 1 job, where a fresh read ran 3 and a reused multi-partition
+    read 2."""
     path = str(tmp_path / "edges")
     _write(spark, TRIANGLE, path)
 
@@ -276,7 +334,7 @@ def test_window_reuses_its_committed_read(spark, tmp_path):
     want = [("a", "p", "b", 1), ("b", "q", "c", 1), ("c", "p", "d", 1),
             ("d", "q", "a", 1)]
     assert _jobs(spark, "window-first", call)[1] == want
-    assert _jobs(spark, "window-again", call) == (2, want)
+    assert _jobs(spark, "window-again", call) == (1, want)
 
 
 def test_uncommitted_window_reads_fresh(spark, tmp_path):

@@ -18,7 +18,7 @@ import time
 import pytest
 
 from kgforge import session
-from kgforge.session import JAVA_OPTIONS, LOCAL_LISTING_THRESHOLD, launch_settings
+from kgforge.session import DEBUGGING, JAVA_OPTIONS, LOCAL_LISTING_THRESHOLD, launch_settings
 
 THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,6 +69,13 @@ def test_extra_conf_wins(install):
     conf = _settings(install, extra_conf=extra).conf
     assert {k: conf[k] for k in extra} == extra
     assert conf["spark.sql.session.timeZone"] == "UTC"
+
+
+def test_dataframe_debugging_is_off_unless_asked_for(install):
+    """No Python call site is captured around each Column function,
+    unless ``extra_conf`` turns the capture back on."""
+    assert _settings(install).conf[DEBUGGING] == "false"
+    assert _settings(install, extra_conf={DEBUGGING: "true"}).conf[DEBUGGING] == "true"
 
 
 def test_defaults_come_from_the_environment(install):

@@ -100,7 +100,9 @@ def main() -> int:
         window_subgraph_topk(spark, edges_path),
         "The day window is a PartitionFilter on the scan — out-of-window "
         "day directories are never opened (scan cost ∝ window, asserted in "
-        "tests/test_temporal.py).",
+        "tests/test_temporal.py). The committed read of a small version is "
+        "coalesced to one partition, so the filter pushes below the Coalesce "
+        "and the count + top-k plan no exchange (tests/test_plans.py).",
     )
     edges = edges_with_day(rewrite_triples(extract_docstream(docs), mmap))
     from kgforge.extract.predicates import canonicalize_predicates
@@ -198,7 +200,8 @@ def main() -> int:
         "One plan for the whole BFS: hop 1 is the source's pairs with no "
         "aggregate of its own; each later hop left-joins the frontier with "
         "the pair relation (one shared broadcast) and keeps min(hops) per "
-        "node.",
+        "node. The snapshot of a small version is one partition, so no "
+        "hop aggregate plans a hash exchange (tests/test_plans.py).",
     )
     print("\n".join(out))
     spark.stop()
