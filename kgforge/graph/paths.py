@@ -40,15 +40,17 @@ data, no driver action per hop):
   not Column objects: every Column function is a round trip through the
   Python gateway. With Column objects and PySpark's call-site capture
   (``session.py``) a 4-hop call made about 1200 round trips; it now
-  makes about 110;
+  makes about 120;
 * past ``_PLAN_HOPS`` (8) hops the plan is cut: ``seen`` is
   localCheckpointed every 8 hops and the walk stops once the last hop
   reached no new node. On the 6262-edge kgbench table one plan cost the
   same as the cut plan at 12-16 hops and about twice as much at 24-32
   (its planning and adaptive re-planning grow with depth), while the cut
-  adds a job and a checkpoint per block. The checkpoint reports no
-  partitioning, so over a one-partition snapshot it is ``coalesce(1)``ed
-  again and the next block plans no exchange either.
+  adds a job and a checkpoint per block. Each checkpoint goes through
+  ``serving.one_partition_if_small``: it reports no partitioning, so a
+  checkpoint of one partition (as every block over a one-partition
+  snapshot makes) is declared one partition again and the next block
+  plans no exchange either.
 
 Scale notes (100 TB): an ANCHORED ``pred+`` explores one entity's
 forward cone — frontier size is bounded by the cone, not the graph, and
@@ -65,7 +67,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.graph.serving import is_one_partition, serving_edges
+from kgforge.graph.serving import one_partition_if_small, serving_edges
 
 
 # hops planned as one query; a deeper walk checkpoints every _PLAN_HOPS
@@ -157,18 +159,13 @@ def reachable_from(
     )
     if max_hops == 1:
         seen = _least(seen)
-    # a checkpoint reports no partitioning: over a one-partition snapshot
-    # it is coalesced again, so the next block plans no exchange either
-    recoalesce = max_hops > _PLAN_HOPS and is_one_partition(edges)
     for hop in range(2, max_hops + 1):
         if hop % _PLAN_HOPS == 1:
             # block boundary: cut the lineage; stop once the last hop
             # reached no new node
-            seen = seen.localCheckpoint()
+            seen = one_partition_if_small(seen.localCheckpoint())
             if seen.where(f"hops = {hop - 1}").isEmpty():
                 break
-            if recoalesce:
-                seen = seen.coalesce(1)
         # the frontier (nodes first reached at hop - 1) joins its out-pairs;
         # every other seen node passes through the left join unmatched.
         # The join key is node alone, so every hop shares one pair exchange.

@@ -29,12 +29,15 @@ version's snapshot is released. A frame that lists no files (a
 checkpoint, ``createDataFrame``, a streaming frame) has no version and
 always passes through.
 
-Identity fast path: a frame OBJECT already keyed to a version skips
-``inputFiles()``, ``semanticHash()`` and ``sameSemantics()`` (listing
-alone is about 180 gateway round trips for a 90-file table). An
-uncached frame's file index never re-lists, so the same object lists
-the same files. A cached frame takes the full key every time:
-``refreshByPath`` can re-list its index.
+A repeat call is cheap on the gateway. The file list crosses it as one
+joined string (PySpark's ``inputFiles()`` fetches the JVM array element
+by element, about two round trips a file), and a frame OBJECT already
+keyed to a version whose listed files are unchanged skips
+``semanticHash()`` and ``sameSemantics()``: one object has one plan.
+The files are still compared on every call, because one object's file
+index can re-list: ``refreshByPath`` or a write to the path refreshes
+every index held by a cached plan, and a frame derived from ``edges``
+and cached shares ``edges``'s index.
 
 ``localCheckpoint`` rather than ``cache()``: the checkpointed scan
 reports no partitioning, so join planning over it is unchanged, and it
@@ -43,19 +46,35 @@ read of a rewritten path against the old cached plan and serve the old
 rows.
 
 A small version is one partition. Both per-version frames, the
-snapshot and ``committed_read``'s read, go through one rule once per
-version: if the optimizer's size estimate of the frame
-(``optimizedPlan().stats().sizeInBytes``) is at most the session's
-``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the frame is
-``coalesce(1)``ed, and the planner sees ``SinglePartition``. Over it,
-``reachable_from``'s per-hop ``min(hops)`` aggregates, BGP alternation
-dedups, the NOT EXISTS distinct, the UNION dedup and a window's count
-+ top-k plan no exchange. AQE would coalesce those shuffles into one
-partition anyway, so only their stage boundaries (a Spark job each, and
-its closure cleaning) go: a 4-hop reach runs 2 jobs instead of 5, a
-window 1 instead of 2. Filters still push below the ``Coalesce``, so a
-window keeps its day ``PartitionFilters``. A version above the size
-keeps its partitions and its plans.
+snapshot and ``committed_read``'s read, go through
+``one_partition_if_small`` once per version: the frame is
+``coalesce(1)``ed, and the planner sees ``SinglePartition``, when one
+task already holds it (a checkpoint of one partition) or when its
+optimizer size estimate (``optimizedPlan().stats().sizeInBytes``: the
+parquet bytes on disk times the share of the row the frame projects)
+is at most ``ONE_TASK_BYTES``. Over it, ``reachable_from``'s per-hop
+``min(hops)`` aggregates, BGP alternation dedups, the NOT EXISTS
+distinct, the UNION dedup and a window's count + top-k plan no
+exchange: a 4-hop reach runs 2 jobs instead of 5, a window 1 instead of
+2, and each job saved is a stage launch and its closure cleaning.
+
+The cost is map-side parallelism. A ``coalesce(1)`` without a shuffle
+runs the whole stage above it in one task: for the committed read the
+parquet scan, decode and day filter, for the snapshot the checkpoint
+read, filters, broadcast-join probe and partial aggregate. A checkpoint
+of one partition was read by one task anyway, so only its stage
+boundaries go. For a frame of more partitions ``ONE_TASK_BYTES`` bounds
+the cost. It was measured on a 4-vCPU host, in ``bench.py``'s session
+at ``local[4]`` and ``local[16]``, over row samples (6k to 963k edges)
+of the 300k-doc bench edge table, one-task frame against partitioned
+frame, interleaved (BENCH.md): up to a 3.2 MB snapshot and a 4.7 MB
+read one task tied or won in every serving class (4-hop reach 23-31%
+faster, window 14-37%), at a 5.7 MB snapshot an unanchored 2-pattern
+BGP ran 20-24% slower in one task, and at 17-25 MB every class was
+slower. The bound lies between. Filters still push below the
+``Coalesce``, so a window keeps its day ``PartitionFilters``. A version
+above the bound, of more than one partition, keeps its partitions and
+its plans.
 
 The table keeps ``SNAPSHOTS`` versions, least recently used first out.
 An evicted or superseded version only loses the table's reference: a
@@ -81,11 +100,15 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 from kgforge.io.tables import read_manifest
 
 SNAPSHOTS = 4  # versions kept (LRU); a constant, not an option
+# size estimate up to which a per-version frame runs in one task (module
+# docstring); a constant, not an option
+ONE_TASK_BYTES = 4 << 20
 _COLS = ("subj_id", "pred", "obj_id")
 
 
@@ -107,77 +130,61 @@ _reads: list[tuple[SparkSession, str, tuple, DataFrame]] = []
 def serving_edges(edges: DataFrame) -> DataFrame:
     """``edges`` on the first sighting of its table version, the
     version's shared distinct ``(subj_id, pred, obj_id)`` snapshot from
-    the second on (see the module docstring for the key, the identity
-    fast path and the release rule)."""
-    if not edges.is_cached:  # only a cached frame's file index can re-list
-        with _lock:
-            v = next((v for v in _versions if v.frame is edges), None)
-            if v is not None:
-                _versions.remove(v)
-                _versions.append(v)
-                return _snapshot(v)
+    the second on (see the module docstring for the key, the cheap
+    repeat call and the release rule)."""
     if edges.isStreaming or not set(_COLS) <= set(edges.columns):
         return edges
-    files = tuple(sorted(edges.inputFiles()))
+    files = _listed_files(edges)
     if not files:
         return edges
-    plan_hash = edges.semanticHash()
-    spark = edges.sparkSession
     with _lock:
-        v = next(
-            (
-                v
-                for v in _versions
-                if v.frame.sparkSession is spark
-                and v.plan_hash == plan_hash
-                and v.frame.sameSemantics(edges)
-            ),
-            None,
-        )
+        v = next((v for v in _versions if v.frame is edges), None)
         if v is None:
-            _versions.append(_Version(edges, plan_hash, files))
-            del _versions[:-SNAPSHOTS]
-            return edges
+            plan_hash, spark = edges.semanticHash(), edges.sparkSession
+            v = next(
+                (
+                    v
+                    for v in _versions
+                    if v.frame.sparkSession is spark
+                    and v.plan_hash == plan_hash
+                    and v.frame.sameSemantics(edges)
+                ),
+                None,
+            )
+            if v is None:
+                _versions.append(_Version(edges, plan_hash, files))
+                del _versions[:-SNAPSHOTS]
+                return edges
         _versions.remove(v)
         _versions.append(v)
         if v.files != files:  # the table was rewritten: a new version
             v.frame, v.files, v.snapshot = edges, files, None
             return edges
-        return _snapshot(v)
+        if v.snapshot is None:
+            v.snapshot = one_partition_if_small(
+                v.frame.select(*_COLS).dropDuplicates().localCheckpoint()
+            )
+        return v.snapshot
 
 
-def _snapshot(v: _Version) -> DataFrame:
-    """The version's snapshot, built on first use (caller holds
-    ``_lock``)."""
-    if v.snapshot is None:
-        v.snapshot = _one_partition_if_small(
-            v.frame.select(*_COLS).dropDuplicates().localCheckpoint()
-        )
-    return v.snapshot
-
-
-def _one_partition_if_small(frame: DataFrame) -> DataFrame:
-    """``frame.coalesce(1)`` when the optimizer's size estimate of
-    ``frame`` is at most the session's advisory partition size, else
-    ``frame`` (see the module docstring)."""
-    jspark = frame.sparkSession._jsparkSession
-    sql_conf = frame.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
-    limit = jspark.sessionState().conf().getConf(
-        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+def _listed_files(edges: DataFrame) -> tuple[str, ...]:
+    """``edges.inputFiles()``, sorted, in three gateway round trips.
+    File URIs escape a newline, so it separates them."""
+    client = edges.sparkSession._sc._gateway._gateway_client
+    listed = JavaClass("org.apache.hadoop.util.StringUtils", client).join(
+        "\n", edges._jdf.inputFiles()
     )
+    return tuple(sorted(listed.split("\n"))) if listed else ()
+
+
+def one_partition_if_small(frame: DataFrame) -> DataFrame:
+    """``frame.coalesce(1)`` when its size estimate is at most
+    ``ONE_TASK_BYTES`` or it already is one partition, else ``frame``
+    (see the module docstring)."""
     size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return frame.coalesce(1) if size <= limit else frame
-
-
-def is_one_partition(frame: DataFrame) -> bool:
-    """Whether ``frame``'s plan ends in a ``coalesce(1)``, as a small
-    version's frames do."""
-    plan = frame._jdf.logicalPlan()
-    return (
-        plan.nodeName() == "Repartition"
-        and plan.numPartitions() == 1
-        and not plan.shuffle()
-    )
+    if size <= ONE_TASK_BYTES or frame._jdf.rdd().getNumPartitions() == 1:
+        return frame.coalesce(1)
+    return frame
 
 
 def committed_read(spark: SparkSession, path: str) -> DataFrame:
@@ -197,7 +204,7 @@ def committed_read(spark: SparkSession, path: str) -> DataFrame:
         if hit is not None:
             _reads.remove(hit)
         if hit is None or hit[2] != version:
-            read = _one_partition_if_small(spark.read.parquet(path))
+            read = one_partition_if_small(spark.read.parquet(path))
             hit = (spark, path, version, read)
         _reads.append(hit)
         del _reads[:-SNAPSHOTS]

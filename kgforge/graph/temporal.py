@@ -19,9 +19,11 @@ Both window queries (and ``bgp.match_bgp_window``) read the path through
 ``graph.serving.committed_read``: one parquet frame per committed table
 version, so a repeated window call reuses its listing and schema instead
 of relisting and re-inferring the table, and a rewrite is read fresh. A
-small version's read is one partition (``serving``'s size rule): the
-day filter still prunes partitions below its ``Coalesce``, and the
-count + top-k run in one stage with no exchange, one Spark job a call.
+small version's read is one partition (``serving.one_partition_if_small``,
+up to a 4 MiB size estimate): the day filter still prunes partitions
+below its ``Coalesce``, and the scan, count and top-k run in one task
+with no exchange, one Spark job a call. A larger read keeps its
+parallel scan.
 
 At 10^12 docs the edges table spans years of crawl days; an analyst's
 "what changed this week" query must not scan the decade. Day partitioning

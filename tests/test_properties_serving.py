@@ -18,9 +18,10 @@ from collections import Counter, deque
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from kgforge.graph import serving
 from kgforge.graph.bgp import match_bgp, match_bgp_not_exists
 from kgforge.graph.paths import reachable_from
-from kgforge.graph.serving import committed_read, is_one_partition, serving_edges
+from kgforge.graph.serving import committed_read, serving_edges
 from kgforge.graph.temporal import window_subgraph_topk
 from kgforge.io.tables import write_table
 from kgforge.graph.wcoj import match_bgp_cycle
@@ -180,24 +181,27 @@ CHAIN = [("n0", "p", "c1", DAYS[0])] + [
 
 def _version(spark, tmp_path, rows, one_partition):
     """A committed day table of ``rows``, read once and sighted twice,
-    and its committed read: both in one partition, or with the advisory
-    partition size set below their size estimate while they are made, so
-    both keep their partitions."""
+    and its committed read: both in one partition, or made with the
+    one-task bound below their size estimate and adaptive coalescing off,
+    so both keep their partitions."""
     path = tempfile.mkdtemp(dir=tmp_path)
     write_table(
         spark.createDataFrame(rows, "subj_id string, pred string, obj_id string, day string"),
         path, "edges", ["day"],
     )
     frame = spark.read.parquet(path)
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    bound, key = serving.ONE_TASK_BYTES, "spark.sql.adaptive.coalescePartitions.enabled"
     if not one_partition:
-        spark.conf.set(key, "1b")
+        serving.ONE_TASK_BYTES = -1
+        spark.conf.set(key, "false")
     try:
         serving_edges(frame)
         served = (serving_edges(frame), committed_read(spark, path))
     finally:
+        serving.ONE_TASK_BYTES = bound
         spark.conf.unset(key)
-    assert [is_one_partition(df) for df in served] == [one_partition] * 2
+    partitions = [df._jdf.rdd().getNumPartitions() for df in served]
+    assert all((n == 1) == one_partition for n in partitions), partitions
     return frame, path
 
 

@@ -6,8 +6,9 @@ evicted snapshot still collects), the first sighting keeps the pushed-
 down Parquet scan, a BGP over a snapshot skips the per-pattern dedup
 except for an alternation term, a small version runs in one partition
 and a large one keeps its partitions, a frame already keyed to a version
-is not listed again, and the serving calls over one committed version
-run a pinned number of Spark jobs."""
+skips the plan comparison but is still listed, so a refresh of its file
+index is never served stale, and the serving calls over one committed
+version run a pinned number of Spark jobs."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ import threading
 from kgforge.graph import serving
 from kgforge.graph.bgp import match_bgp
 from kgforge.graph.paths import reachable_from
-from kgforge.graph.serving import SNAPSHOTS, is_one_partition, serving_edges
+from kgforge.graph.serving import SNAPSHOTS, serving_edges
 from kgforge.graph.temporal import window_subgraph_topk
 from kgforge.io.tables import write_table
 from kgforge.session import LOCAL_LISTING_THRESHOLD
@@ -50,6 +51,10 @@ def _rdd_id(df) -> int:
     while plan.nodeName() != "LogicalRDD":
         plan = plan.child()
     return plan.rdd().id()
+
+
+def _partitions(df) -> int:
+    return df._jdf.rdd().getNumPartitions()
 
 
 def _plan(df) -> str:
@@ -257,49 +262,78 @@ def test_reach_over_a_snapshot_runs_few_jobs(spark, tmp_path):
     with an exchange per hop aggregate it ran 5, and the per-hop
     checkpoint loop ran 20."""
     edges = _snapshotted(spark, CHAIN, str(tmp_path / "edges"))
-    assert is_one_partition(serving_edges(edges))
+    assert _partitions(serving_edges(edges)) == 1
     assert _reach_jobs(spark, "reach-small", edges) == 2
 
 
-def test_large_version_keeps_its_partitions(spark, tmp_path):
-    """A version whose size estimate exceeds the advisory partition size
-    when it is snapshotted is not coalesced, and reach keeps its per-hop
-    exchanges: 5 jobs."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    spark.conf.set(key, "1b")
+def test_large_version_keeps_its_partitions(spark, tmp_path, monkeypatch):
+    """A version above the one-task bound whose snapshot is more than one
+    partition (adaptive coalescing off while it is built) is not
+    coalesced, and reach keeps its per-hop exchanges: 5 jobs."""
+    monkeypatch.setattr(serving, "ONE_TASK_BYTES", -1)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
     try:
         edges = _snapshotted(spark, CHAIN, str(tmp_path / "edges"))
     finally:
         spark.conf.unset(key)
-    assert not is_one_partition(serving_edges(edges))
+    assert _partitions(serving_edges(edges)) > 1
     assert _reach_jobs(spark, "reach-large", edges) == 5
 
 
-def test_repeated_calls_on_one_frame_list_its_files_once(spark, tmp_path, monkeypatch):
-    """A frame object already keyed to a version skips ``inputFiles``
-    (and the plan comparison); a cached frame, whose file index a
-    refresh can re-list, does not."""
+def test_repeated_calls_on_one_frame_skip_the_plan_key(spark, tmp_path, monkeypatch):
+    """A frame object already keyed to a version skips ``semanticHash``
+    on later calls, and its file list crosses the gateway as one string:
+    a repeat ``serving_edges`` makes the same few round trips over 3
+    files as over 30."""
+    pattern = [("?x", "owns", "?y")]
+    hashed = []
+    semantic_hash = type(spark.range(1)).semanticHash
+    monkeypatch.setattr(type(spark.range(1)), "semanticHash",
+                        lambda self: hashed.append(self) or semantic_hash(self))
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, sent = client.send_command, [0]
+
+    def counted(self, *a, **k):
+        sent[0] += 1
+        return send(self, *a, **k)
+
+    trips = []
+    for n_days in (3, 30):
+        rows = [(f"n{i}", "owns", f"n{i + 1}", f"2025-01-{i + 1:02d}") for i in range(n_days)]
+        path = str(tmp_path / f"edges{n_days}")
+        _write(spark, rows, path)
+        edges = spark.read.parquet(path)
+        assert len(edges.inputFiles()) == n_days
+        for _ in range(3):
+            assert len(match_bgp(edges, pattern).collect()) == n_days
+        assert sum(h is edges for h in hashed) == 1
+        monkeypatch.setattr(client, "send_command", counted)
+        sent[0] = 0
+        assert serving_edges(edges) is not edges
+        monkeypatch.setattr(client, "send_command", send)
+        trips.append(sent[0])
+    assert trips[0] == trips[1] <= 8, trips
+
+
+def test_refreshed_index_is_never_served_stale(spark, tmp_path):
+    """A cached frame derived from ``edges`` shares its file index, so a
+    rewrite and ``refreshByPath`` re-list the index of ``edges`` itself:
+    the next call on the same object answers from the new files."""
     path = str(tmp_path / "edges")
     _write(spark, OLD, path)
     edges = spark.read.parquet(path)
-    listed = []
-    input_files = type(edges).inputFiles
-
-    def counted(self):
-        listed.append(self)
-        return input_files(self)
-
-    monkeypatch.setattr(type(edges), "inputFiles", counted)
     pattern = [("?x", "owns", "?y")]
     for _ in range(3):
         assert _rows(match_bgp(edges, pattern)) == [("a", "b"), ("b", "c"), ("c", "d")]
-    assert listed == [edges]
-    edges.cache()
+    derived = edges.select("subj_id", "pred", "obj_id").cache()
     try:
-        assert _rows(match_bgp(edges, pattern)) == [("a", "b"), ("b", "c"), ("c", "d")]
-        assert listed == [edges, edges]
+        derived.count()
+        _write(spark, NEW, path)
+        spark.catalog.refreshByPath(path)
+        assert _rows(match_bgp(edges, pattern)) == [("a", "x"), ("x", "y")]
     finally:
-        edges.unpersist()
+        derived.unpersist()
 
 
 TRIANGLE = [
