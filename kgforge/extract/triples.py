@@ -549,12 +549,9 @@ ZH_REL_PATTERNS: list[tuple[re.Pattern, str, bool]] = [
 _ZH_MODALITY_SUFFIXES = ("计划", "试图", "希望", "打算", "拟", "考虑", "将")
 _ZH_FACTIVE_SUFFIXES = ("宣布", "正式")
 # an object span ending in 失败/取消 means the asserted event FAILED or
-# was CANCELLED ("收购星辰软件失败了", "…座谈取消了") — no edge. For
-# verb-MEDIAL patterns the marker is absorbed into the object span and
-# caught by group(2).endswith; verb-FINAL patterns (the 与-comitative
-# forms: …签署/合并/座谈) leave it AFTER the match, so the match loop also
-# probes the trailing text with startswith (round-5 review finding: the
-# suffix guard could never see past the verb).
+# was CANCELLED ("收购星辰软件失败了", "…座谈取消了") — no edge; the
+# verb-FINAL 与-comitative forms (…签署/合并/座谈) leave the marker AFTER
+# the match, where _zh_asserted also looks.
 _ZH_FAILURE_SUFFIXES = ("失败", "取消")
 
 MAX_ARG_TOKENS = 4  # entity window either side of the relation
@@ -1202,6 +1199,21 @@ _ZH_SERVE_FULL = re.compile(_ZH_ENT + "在" + _ZH_ENT + "担任" + _ZH_ENT)
 _ZH_JOIN_SERVE = re.compile(_ZH_ENT + "加入了?" + _ZH_ENT + "担任" + _ZH_ENT)
 
 
+def _zh_asserted(m: re.Match) -> bool:
+    """Whether the zh relation match ``m`` asserts a fact: the one guard
+    of every zh emission site. Not when any span ends in a negator (在Y
+    没担任), the first in a modality word ("蓝海集团计划收购…", "星辰软件
+    将被…收购"), or the last in a failure marker, nor when a failure
+    marker follows the match ("李娜与天河科技座谈失败")."""
+    spans = m.groups()
+    return not (
+        any(span.endswith(_ZH_NEGATORS) for span in spans)
+        or spans[0].endswith(_ZH_MODALITY_SUFFIXES)
+        or spans[-1].endswith(_ZH_FAILURE_SUFFIXES)
+        or m.string.startswith(_ZH_FAILURE_SUFFIXES, m.end())
+    )
+
+
 def extract_triples_zh(sentence: str) -> list[tuple[str, str, str, float]]:
     """Chinese pattern extraction over a (space-free) normalized sentence.
     Each pattern may fire once per sentence position; predicates reuse the
@@ -1215,7 +1227,11 @@ def extract_triples_zh(sentence: str) -> list[tuple[str, str, str, float]]:
     match from position 0 with exactly that subject, so an unrelated
     second clause can never borrow it. A trailing 和/与/及+entity after a
     matched object ("收购了A和B") emits one additional coordinated-object
-    triple."""
+    triple.
+
+    The 3-group pre-pass, the direct pattern loop and the inherited-
+    subject clause emit only what ``_zh_asserted`` passes: no negated,
+    intended or failed relation becomes an edge."""
     body = sentence.strip(_EDGE_PUNCT + " ")
     triples: list[tuple[str, str, str, float]] = []
     last_subj: str | None = None
@@ -1227,13 +1243,13 @@ def extract_triples_zh(sentence: str) -> list[tuple[str, str, str, float]]:
         for rx, org_pred in ((_ZH_SERVE_FULL, "works at"), (_ZH_JOIN_SERVE, "joined")):
             saw = False
             for m in rx.finditer(seg):
-                saw = True  # sub the span even when negated: a leftover
-                # "…加入蓝海集团担任…" tail would otherwise feed the
-                # 2-group patterns a garbage negated subject
+                saw = True  # sub the span even when not asserted: a
+                # leftover "…加入蓝海集团担任…" tail would otherwise feed
+                # the 2-group patterns a garbage subject
+                if not _zh_asserted(m):
+                    continue  # assert neither edge
                 subj = _strip_zh_prefixes(m.group(1))
                 org, role = m.group(2), m.group(3)
-                if m.group(1).endswith(_ZH_NEGATORS) or org.endswith(_ZH_NEGATORS):
-                    continue  # negated — assert neither edge
                 if subj and subj != org:
                     triples.append((subj, org_pred, org, 0.8))
                     matched = True
@@ -1245,22 +1261,7 @@ def extract_triples_zh(sentence: str) -> list[tuple[str, str, str, float]]:
                 seg = rx.sub("", seg)
         for rx, pred, swap in ZH_REL_PATTERNS:
             for m in rx.finditer(seg):
-                if m.group(1).endswith(_ZH_NEGATORS) or m.group(2).endswith(
-                    _ZH_NEGATORS
-                ):
-                    continue  # negated assertion — no edge (either a
-                    # negated subject-side span or a mid-pattern negator
-                    # absorbed by the first span, e.g. 在Y没担任)
-                if m.group(1).endswith(_ZH_MODALITY_SUFFIXES):
-                    # "蓝海集团计划收购…" — intent, not fact; for 被-
-                    # passives the modal sits at the end of the PATIENT
-                    # span ("星辰软件将被…收购") — same suppression
-                    continue
-                if m.group(2).endswith(_ZH_FAILURE_SUFFIXES):
-                    continue  # "收购星辰软件失败了" — the event failed
-                if seg[m.end():].startswith(_ZH_FAILURE_SUFFIXES):
-                    # verb-FINAL patterns ("李娜与天河科技座谈失败") leave
-                    # the failure marker after the verb, outside group(2)
+                if not _zh_asserted(m):
                     continue
                 subj, obj = _strip_zh_prefixes(m.group(1)), m.group(2)
                 for fsuf in _ZH_FACTIVE_SUFFIXES:
@@ -1291,17 +1292,8 @@ def extract_triples_zh(sentence: str) -> list[tuple[str, str, str, float]]:
                     continue  # an elided subject is never the 被-patient
                 m = rx.match(last_subj + seg)
                 if m and _strip_zh_prefixes(m.group(1)) == last_subj:
-                    if (
-                        m.group(2).endswith(_ZH_FAILURE_SUFFIXES)
-                        or (last_subj + seg)[m.end():].startswith(
-                            _ZH_FAILURE_SUFFIXES
-                        )
-                        or m.group(1).endswith(_ZH_MODALITY_SUFFIXES)
-                    ):
-                        # the inherited-subject clause carries the same
-                        # modality/failure guards as the direct path
-                        # ("…，收购星辰软件失败了" must not become an edge)
-                        break
+                    if not _zh_asserted(m):
+                        break  # "…，收购星辰软件失败了", "…，在上海没收购…"
                     obj = m.group(2)
                     if obj and obj != last_subj:
                         triples.append((last_subj, pred, obj, 0.8))
@@ -1874,9 +1866,13 @@ def _emit_active(
     ok: bool = True,
     conf=_open_conf,
     donate: bool = True,
+    pred: str | None = None,
 ) -> tuple[list[str] | None, str | None]:
-    """Emit the active-voice relation ``tokens[i : rel_end + 1]`` of tiers
-    1 and 2b–2d; returns the next ``(last_subj, last_vtok)``.
+    """Emit the relation ``tokens[i : rel_end + 1]`` of every English
+    tier; returns the next ``(last_subj, last_vtok)``. ``pred`` replaces
+    the relation span as the predicate: the passive tier passes the bare
+    participle for its "V-ed ... by" span and swaps the roles of what
+    this appends.
 
     An empty subject span borrows the previous conjunct's subject
     (_borrow_subject); across a bare comma only for a single-token
@@ -1907,7 +1903,8 @@ def _emit_active(
         return (subj_tokens, tok) if donate else (last_subj, last_vtok)
     subj = " ".join(subj_tokens)
     obj = " ".join(obj_tokens)
-    pred = " ".join(tokens[i : rel_end + 1])
+    if pred is None:
+        pred = " ".join(tokens[i : rel_end + 1])
     m = _modal_in_gap(pairs, i - 1)
     if m:
         pred = f"{m} {pred}"
@@ -1938,11 +1935,11 @@ def extract_triples(
       adverbs + relation-ending preposition), with a ``V to V [ADV* P]``
       control-verb extension.
 
-    Tiers 2a–2d carry conf ∈ [0.5, 0.7]. The active-voice tiers (1,
-    2b–2d) detect their relation span and emit through ``_emit_active``
-    (argument spans, elided-subject borrow, negation, modal prefix,
-    coordination fan-out, subject carry-over); 2a keeps its mirrored
-    block with the agent and patient roles swapped. Relative/appositive
+    Tiers 2a–2d carry conf ∈ [0.5, 0.7]. Every tier detects its relation
+    span and emits through ``_emit_active`` (argument spans, elided-
+    subject borrow, negation, modal prefix, coordination fan-out, subject
+    carry-over); 2a swaps the agent and patient of what it appended and
+    carries no subject over. Relative/appositive
     clauses between commas are skipped so subject spans reach across
     them. subj = nearest non-stopword span left of the relation; obj =
     nearest non-stopword span right; conf scales with argument
@@ -2031,36 +2028,17 @@ def extract_triples(
                 if j < n and j - i <= 5 and tokens[j] == "by" and not boundary[j]:
                     by_ix = j
             if by_ix > 0:
-                subj_tokens, _send, s_stop = _trim_obj(pairs, by_ix + 1)  # agent
-                # patient (aux skipped); the attributive-position rule
-                # keeps opening participles ("RESTRUCTURED units were
-                # announced by acme corp") while still stopping at a
-                # matrix finite verb to the left
-                obj_tokens, o_start = _trim_subj(pairs, i)
-                borrowed = False
-                if not obj_tokens:
-                    # "X sold assets and WAS ACQUIRED BY Y" — the elided
-                    # patient is the previous conjunct's subject; last_subj
-                    # itself stays unset by this tier (agent/patient topic
-                    # ambiguity, same rule as the zh 被-passive)
-                    obj_tokens, borrowed = _borrow_subject(
-                        pairs, raw, i, tok, last_subj, last_vtok, subj_tokens
-                    )
-                if subj_tokens and obj_tokens and not _negated(pairs, i - 2):
-                    subj = " ".join(subj_tokens)
-                    obj = " ".join(obj_tokens)
-                    conf = _open_conf(subj_tokens, obj_tokens)
-                    modal = _modal_in_gap(pairs, i - 1)
-                    pred = f"{modal} {tok}" if modal else tok
-                    # "iron foods WILL BE acquired by X" — same modality
-                    # marking as the active form "X will acquire"
-                    triples.append((subj, pred, obj, conf))
-                    # coordination: "A and B were acquired by C" / "… by C and D"
-                    if not borrowed:
-                        for co_patient in _coord_subjects(pairs, raw, o_start):
-                            triples.append((subj, pred, co_patient, conf))
-                    for co_agent in _coord_objects(pairs, raw, _send, s_stop):
-                        triples.append((co_agent, pred, obj, conf))
+                # the active path over (patient, V-ed, agent), read back
+                # agent-first; the negator gap opens left of the copula
+                # even when it carries a comma, and last_subj stays unset
+                # (agent/patient topic ambiguity, as for the zh 被-passive)
+                k = len(triples)
+                _emit_active(
+                    triples, pairs, raw, tokens, i, by_ix, last_subj, last_vtok,
+                    ok=not _negated(pairs, i - 2), donate=False, pred=tok,
+                )
+                if len(triples) > k:
+                    triples[k:] = [(o, p, s, c) for s, p, o, c in triples[k:]]
                     i = by_ix + 1
                     continue
         # tier 2d — nominal relation: BE + [DET] + NP{1..3} + "of"

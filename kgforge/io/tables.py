@@ -7,10 +7,7 @@ write is made atomic-by-manifest — data lands first, then a
 lineage (partition_id, rows, order-insensitive checksum) and marks the
 table committed. A stage whose manifest is present and committed is
 skipped on re-run and its output re-read (resume = anti-join of pending
-work against completed lineage, SURVEY.md §4.3-4). When an Iceberg catalog
-is configured (``spark.sql.catalog.*`` with the runtime jar on a real
-cluster), ``use_iceberg=True`` routes through ``writeTo().partitionedBy``
-instead — same call sites, no engine changes.
+work against completed lineage, SURVEY.md §4.3-4).
 
 Every other Parquet write of stage data goes through ``write_parquet``,
 which clusters rows by the partition columns before ``partitionBy``: a
@@ -117,18 +114,10 @@ def write_table(
     path: str,
     stage: str,
     partition_by: list[str] | None = None,
-    use_iceberg: bool = False,
 ) -> dict:
     """Write + commit a stage output table; returns the manifest dict."""
-    if use_iceberg:  # pragma: no cover - needs the Iceberg runtime jar
-        writer = df.writeTo(path)
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
-        data_df = df.sparkSession.read.format("iceberg").load(path)
-    else:
-        write_parquet(df, path, partition_by)
-        data_df = df.sparkSession.read.parquet(path)
+    write_parquet(df, path, partition_by)
+    data_df = df.sparkSession.read.parquet(path)
     # one post-write scan: the table's count and checksum are the sums of
     # its per-partition ones (an empty table has no partitions: 0, "0")
     lineage = partition_lineage(data_df, stage)
@@ -165,10 +154,6 @@ def commit_manifest(path: str, manifest: dict) -> None:
     never leaves a half-written manifest that reads as committed. Shared
     by write_table and the incremental N-Triples exporter."""
     write_durable(manifest_path(path), json.dumps(manifest, indent=1))
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_manifest(path: str) -> dict:

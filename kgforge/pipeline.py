@@ -46,14 +46,14 @@ def run_pipeline(
     def stage(name: str, build):
         path = os.path.join(out_dir, name)
         if resume and tables.is_committed(path, name):
-            df = tables.read_table(spark, path)
+            df = spark.read.parquet(path)
             manifests.append(tables.read_manifest(path))
         else:
             df, partition_by = build()
             manifests.append(
                 tables.write_table(df, path, name, partition_by=partition_by)
             )
-            df = tables.read_table(spark, path)
+            df = spark.read.parquet(path)
         results[name] = df
         return df
 

@@ -1002,6 +1002,14 @@ GOLD = [
     ("Acme corp earned far more than expected.", "en", [], True),
     ("Acme corp acquired far more than 20 companies.", "en",
      [("acme corp", "acquired", "20 companies")], True),
+    # --- zh: one assertion guard at every emission site -----------------
+    # the 3-group pre-pass takes the modality and failure guards, and the
+    # inherited-subject clause the negation guard, of the direct path
+    ("王伟计划加入蓝海集团担任总经理。", "zh", [], True),  # intent
+    ("李娜计划在天河科技担任总裁。", "zh", [], True),  # intent
+    ("王伟加入蓝海集团担任总经理失败了。", "zh", [], True),  # failed
+    ("蓝海集团收购了星辰软件，在上海没收购华光能源。", "zh",
+     [("蓝海集团", "acquired", "星辰软件")], True),  # negated 2nd clause
 ]
 
 
@@ -1046,6 +1054,17 @@ def test_honest_overall_precision_and_recall():
     # require revisiting, with the honest numbers re-printed above
     assert precision >= 0.97, f"precision {precision:.3f}"
     assert recall >= 0.98, f"recall {recall:.3f}"
+
+
+def test_clean_zh_gold_is_exact():
+    """Every clean zh sentence gives exactly its gold triples, so a zh
+    false positive (a negated, intended or failed relation that one
+    emission site let through) fails here instead of only lowering the
+    overall precision."""
+    for sentence, lang, gold, clean in GOLD:
+        if lang == "zh" and clean:
+            got = {t[:3] for t in extract_triples(sentence, lang)}
+            assert got == set(gold), (sentence, got)
 
 
 def test_round2_limitations_promoted():

@@ -13,6 +13,9 @@ from hypothesis import strategies as st
 from kgforge.extract.triples import (
     _NEGATORS,
     _STOPWORDS,
+    _ZH_FAILURE_SUFFIXES,
+    _ZH_MODALITY_SUFFIXES,
+    _ZH_NEGATORS,
     MAX_ARG_TOKENS,
     extract_triples,
     split_sentences,
@@ -112,3 +115,43 @@ def test_zh_elided_subject_inherits_only_exactly(first, sep, verb2, obj2):
     allowed_subjects = {t[0] for t in first_triples}
     for subj, _pred, _obj, _conf in emitted[len(first_triples):]:
         assert subj in allowed_subjects, (sentence, subj, allowed_subjects)
+
+
+@given(
+    _ZH_ENT_ST,
+    _ZH_ENT_ST,
+    _ZH_ENT_ST,
+    st.sampled_from(_ZH_VERBS),
+    st.sampled_from(["own clause", "inherited subject", "在…担任", "加入…担任"]),
+    st.sampled_from(
+        # "并未" is left out: the clause split takes its 并 for the
+        # conjunction, and its 未 is drawn on its own
+        [("negator", w) for w in _ZH_NEGATORS if w != "并未"]
+        + [("modality", w) for w in _ZH_MODALITY_SUFFIXES]
+        + [("failure", w) for w in _ZH_FAILURE_SUFFIXES]
+    ),
+)
+@settings(max_examples=80, deadline=None)
+def test_zh_unasserted_relation_never_emits(a, b, c, verb, form, mark):
+    """A zh relation marked by a negator or a modality word before its
+    verb, or by a failure marker after it, emits nothing: in its own
+    clause, in a clause that inherits the previous clause's subject, and
+    in the 3-group 在…担任 / 加入…担任 forms."""
+    kind, word = mark
+    pre, post = ("", word + "了") if kind == "failure" else (word, "")
+    lead = ""
+    if form == "own clause":
+        clause = f"{a}{pre}{verb}{b}{post}"
+    elif form == "inherited subject":
+        # the 在-phrase lets the inherited subject's span reach the
+        # marker and still strip back to that subject; 担任 after it is
+        # the 在Y担任 works-at shape, so another verb stands in
+        lead = f"{a}收购了{b}，"
+        clause = f"在{c}{pre}{verb if verb != '担任' else '投资了'}{b}{post}"
+    elif form == "在…担任":
+        clause = f"{a}{pre}在{b}担任{c}{post}"
+    else:
+        clause = f"{a}{pre}加入{b}担任{c}{post}"
+    first = extract_triples(f"{lead}。", "zh") if lead else []
+    emitted = extract_triples(f"{lead}{clause}。", "zh")
+    assert emitted == first, (lead + clause, emitted)

@@ -8,11 +8,18 @@ import contextlib
 import io
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    # the edge tables the plans read live only as long as the run
+    with tempfile.TemporaryDirectory(prefix="kgforge_plans_") as tmp:
+        return _dump(tmp)
+
+
+def _dump(tmp: str) -> int:
     from kgforge.fixtures.gen import gen_alias_rows, gen_webdocs_rows
     from kgforge.queries import q_revenue_topk, q_scan_dropna
     from kgforge.session import get_spark
@@ -84,14 +91,10 @@ def main() -> int:
         "split → matcher mapInPandas) — zero shuffles; dictionary ships in "
         "the closure.",
     )
-    import tempfile
-
     from kgforge.graph.temporal import materialize_edges_by_day, window_subgraph_topk
     from kgforge.stages.canonicalize import edges_with_day
 
-    edges_path = os.path.join(
-        tempfile.mkdtemp(prefix="kgforge_plans_"), "edges_by_day"
-    )
+    edges_path = os.path.join(tmp, "edges_by_day")
     materialize_edges_by_day(
         edges_with_day(rewrite_triples(extract_docstream(docs), mmap)), edges_path
     )
@@ -177,7 +180,7 @@ def main() -> int:
     from kgforge.graph.paths import reachable_from
     from kgforge.graph.serving import serving_edges
 
-    served_path = os.path.join(os.path.dirname(edges_path), "edges_served")
+    served_path = os.path.join(tmp, "edges_served")
     bare_edges.write.parquet(served_path)
     served = spark.read.parquet(served_path)
     serving_edges(served)
